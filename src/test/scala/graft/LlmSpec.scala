@@ -158,6 +158,18 @@ class LlmSpec extends AnyFunSuite {
     assert(sFast("a") == "Z" && sFast("x") == "x")
   }
 
+  test("connectedComponents non-convergence names how many labels " +
+       "were still changing") {
+    // path 0-1-…-49: the fused init labels u with u−1, and one
+    // propagation+jump round moves every u ≥ 2 to u−2 — 48 changes
+    val pairs = (0L until 49L).map(i => (i, i + 1)).toDF("id1", "id2")
+    val e = intercept[IllegalStateException] {
+      Dedup.connectedComponents(pairs, maxIters = 1, smallCutoff = 0L)
+    }
+    assert(e.getMessage.contains("48 labels still changing"),
+      e.getMessage)
+  }
+
   test("imageAHash + hamming64Pairs: resize is Hamming-0, one-cell " +
        "perturbation stays in the ball, unrelated patterns stay out") {
     val ids = Seq(3L, 11L, 29L).toDF("id")

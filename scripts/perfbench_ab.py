@@ -1,0 +1,176 @@
+#!/usr/bin/env python3
+"""Interleaved A/B of the repo benchmark: a base revision against the
+working tree, on one host, with the same seeds.
+
+    python3 scripts/perfbench_ab.py --base HEAD~1 --workload report_window \
+        --seeds 411 412 413 414 415 --out ab_report_window.json
+
+The base revision's committed files are exported (`git archive`) into a
+temporary directory, and `perfbench/run.py --trace 0` runs there and in
+the working tree alternately, one pair per seed, each run as long as
+BENCHMARK.json's `run_seconds` (the benchmark's own length). The side
+that goes first alternates from seed to seed, so a slow drift of the
+host charges both sides alike. Each checkout builds its own classes
+under its own `perfbench/.work/`.
+
+Prints one line per run, then per-metric medians, the change's delta
+against the base, the base's spread (interquartile range over median)
+and the number of seeds on which the change was better. The same
+figures, with every run's metrics, go to `--out` as JSON. Metric names,
+units and better-directions come from BENCHMARK.json; nothing under
+perfbench/ is modified.
+"""
+import argparse
+import json
+import os
+import shutil
+import statistics
+import subprocess
+import sys
+import tempfile
+import time
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def git(*args):
+    return subprocess.run(["git", "-C", ROOT] + list(args), check=True,
+                          capture_output=True, text=True).stdout.strip()
+
+
+def export(rev, dest):
+    """The committed files of `rev` under `dest` (what a fresh checkout
+    of the revision holds, without touching this repository's git
+    state)."""
+    archive = subprocess.Popen(["git", "-C", ROOT, "archive", rev],
+                               stdout=subprocess.PIPE)
+    subprocess.run(["tar", "-x", "-C", dest], stdin=archive.stdout,
+                   check=True)
+    archive.stdout.close()
+    if archive.wait() != 0:
+        raise SystemExit(f"git archive {rev} failed")
+
+
+def run_once(checkout, workload, seed, seconds):
+    cmd = [sys.executable, os.path.join(checkout, "perfbench", "run.py"),
+           "--workload", workload, "--seed", str(seed),
+           "--seconds", str(seconds), "--trace", "0"]
+    t0 = time.perf_counter()
+    proc = subprocess.run(cmd, cwd=checkout, capture_output=True, text=True)
+    wall = time.perf_counter() - t0
+    lines = proc.stdout.strip().splitlines()
+    if proc.returncode != 0 or not lines:
+        sys.stderr.write(proc.stderr[-4000:])
+        raise SystemExit(f"perfbench failed in {checkout} "
+                         f"(seed {seed}, exit {proc.returncode})")
+    out = json.loads(lines[-1])
+    out["metrics"] = {k: v["value"] for k, v in out["metrics"].items()}
+    out["wall_s"] = wall
+    return out
+
+
+def quartiles(xs):
+    xs = sorted(xs)
+    def q(p):
+        k = (len(xs) - 1) * p
+        lo = int(k)
+        hi = min(lo + 1, len(xs) - 1)
+        return xs[lo] + (xs[hi] - xs[lo]) * (k - lo)
+    return q(0.25), q(0.5), q(0.75)
+
+
+def summarize(runs, metrics):
+    by_side = {side: {r["seed"]: r for r in runs if r["side"] == side}
+               for side in ("base", "change")}
+    seeds = sorted(by_side["base"])
+    summary = {}
+    for m in metrics:
+        name, lower = m["name"], m["better"] == "lower"
+        base = [by_side["base"][s]["metrics"][name] for s in seeds]
+        change = [by_side["change"][s]["metrics"][name] for s in seeds]
+        q1, med, q3 = quartiles(base)
+        cmed = statistics.median(change)
+        better = sum((c < b) if lower else (c > b)
+                     for b, c in zip(base, change))
+        summary[name] = {
+            "unit": m["unit"], "better": m["better"], "bound": m["bound"],
+            "base": base, "change": change,
+            "base_median": med, "change_median": cmed,
+            "delta": (cmed - med) / med if med else None,
+            "base_iqr_over_median": (q3 - q1) / med if med else None,
+            "pairs_better": better,
+        }
+    return seeds, summary
+
+
+def main(argv=None):
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("--base", required=True,
+                    help="git revision to compare the working tree against")
+    ap.add_argument("--workload", required=True)
+    ap.add_argument("--seeds", type=int, nargs="+", required=True)
+    ap.add_argument("--out", help="JSON output path "
+                    "(default: ab_<workload>.json in the current directory)")
+    args = ap.parse_args(argv)
+
+    with open(os.path.join(ROOT, "BENCHMARK.json")) as fh:
+        bench = json.load(fh)
+    metrics, seconds = bench["end_to_end"], bench["run_seconds"]
+    base_sha = git("rev-parse", "--verify", args.base + "^{commit}")
+    head_sha = git("rev-parse", "HEAD")
+    dirty = bool(git("status", "--porcelain", "--untracked-files=no"))
+
+    tmp = tempfile.mkdtemp(prefix="perfbench_ab_")
+    runs = []
+    try:
+        base_dir = os.path.join(tmp, "base")
+        os.makedirs(base_dir)
+        export(base_sha, base_dir)
+        sides = {"base": base_dir, "change": ROOT}
+        for i, seed in enumerate(args.seeds):
+            order = ("base", "change") if i % 2 == 0 else ("change", "base")
+            for side in order:
+                r = run_once(sides[side], args.workload, seed, seconds)
+                runs.append({"seed": seed, "side": side,
+                             "correct": r["correct"],
+                             "attempted": r["attempted"],
+                             "failed": r["failed"],
+                             "harness_wall_s": round(r["wall_s"], 1),
+                             "metrics": r["metrics"]})
+                print(f"seed {seed} {side:6s} correct={r['correct']} "
+                      f"failed={r['failed']}/{r['attempted']} "
+                      + " ".join(f"{m['name']}={r['metrics'][m['name']]:.3f}"
+                                 for m in metrics), flush=True)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+    seeds, summary = summarize(runs, metrics)
+    print(f"\n{args.workload}: base {base_sha[:12]} vs working tree "
+          f"({head_sha[:12]}{' + edits' if dirty else ''}), "
+          f"{len(seeds)} seeds, --seconds {seconds:g}")
+    print(f"  {'metric':20s} {'base':>10s} {'change':>10s} {'delta':>8s} "
+          f"{'base IQR/med':>13s} {'better':>7s}")
+    for name, s in summary.items():
+        delta = "n/a" if s["delta"] is None else f"{100 * s['delta']:+.1f}%"
+        spread = ("n/a" if s["base_iqr_over_median"] is None
+                  else f"{s['base_iqr_over_median']:.3f}")
+        print(f"  {name:20s} {s['base_median']:10.3f} "
+              f"{s['change_median']:10.3f} {delta:>8s} {spread:>13s} "
+              f"{s['pairs_better']:>3d}/{len(seeds)}")
+    out = args.out or f"ab_{args.workload}.json"
+    with open(out, "w") as fh:
+        json.dump({
+            "workload": args.workload, "seeds": seeds,
+            "seconds": seconds, "cores": len(os.sched_getaffinity(0)),
+            "base": {"rev": args.base, "commit": base_sha},
+            "change": {"commit": head_sha, "uncommitted_edits": dirty},
+            "all_correct": all(r["correct"] for r in runs),
+            "failed": sum(r["failed"] for r in runs),
+            "summary": summary, "runs": runs,
+        }, fh, indent=1)
+        fh.write("\n")
+    print(f"wrote {out}")
+
+
+if __name__ == "__main__":
+    main()

@@ -309,12 +309,15 @@ object Tables {
       conf: org.apache.hadoop.conf.Configuration): Long =
     footerBlocks(path, conf).map(_.getRowCount).sum
 
-  /** The one footer walk: the row groups of every visible parquet part
-    * file under `path`, none for a missing path. Hidden path components
-    * (_temporary from a crashed append, .staging, _SUCCESS-style
-    * markers) are skipped exactly like Spark's reader — otherwise a
-    * crash mid-append would leak uncommitted task files the read side
-    * never sees into every footer-derived figure. */
+  /** The one footer walk: the row groups of every visible file under
+    * `path`, none for a missing path. Like Spark's reader, a visible
+    * file is data whatever its name (Hive-style `000000_0` part files
+    * carry no `.parquet` suffix) — skipping one would under-count rows
+    * and under-state maxes. Hidden path components (_temporary from a
+    * crashed append, .staging, _SUCCESS-style markers) are skipped
+    * exactly like Spark's reader — otherwise a crash mid-append would
+    * leak uncommitted task files the read side never sees into every
+    * footer-derived figure. */
   private def footerBlocks(path: String,
       conf: org.apache.hadoop.conf.Configuration):
       Seq[org.apache.parquet.hadoop.metadata.BlockMetaData] = {
@@ -330,8 +333,7 @@ object Tables {
     val it = fs.listFiles(p, true)
     while (it.hasNext) {
       val f = it.next()
-      if (f.isFile && f.getPath.getName.endsWith(".parquet") &&
-          visible(f.getPath)) {
+      if (f.isFile && visible(f.getPath)) {
         val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
           org.apache.parquet.hadoop.util.HadoopInputFile
             .fromStatus(f, conf))

@@ -3,6 +3,7 @@ package graft.etl
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Tables
 import graft.ops.Relational
 import graft.trgx.Trgx
 
@@ -10,6 +11,8 @@ import graft.trgx.Trgx
   * `graft.etl`).
   */
 object Pipelines {
+  private val log =
+    org.slf4j.LoggerFactory.getLogger("graft.etl.Pipelines")
 
   /** EP-3: the ODS merge load (reference
     * src/bolome/ods/d_bolome_show.clj:58-83): bookkeeping → full-outer
@@ -38,18 +41,30 @@ object Pipelines {
     val merged = Relational.fullOuterMerge(
       stg.withColumn(idCol, lit(null).cast("long")), ods,
       naturalKey, valueCols :+ idCol)
-    // 4. surrogate ids for new rows (load-max-dw-id + row-num)
-    val maxId = ods.agg(max(col(idCol))).first() match {
-      case r if r.isNullAt(0) => 0L
-      case r => r.getLong(0)
+    // 4. surrogate ids for new rows (load-max-dw-id + row-num), with
+    // load-max-dw-id read from the ods footers; an empty ods gives 0,
+    // and a row group without usable stats falls back, loudly, to the
+    // agg job
+    val conf = spark.sessionState.newHadoopConf()
+    val maxId = Tables.parquetLongMax(odsPath, conf, idCol).getOrElse {
+      if (Tables.parquetRowCount(odsPath, conf) == 0L) 0L
+      else {
+        log.warn(s"odsMerge: no usable footer stats for '$idCol' under " +
+          s"$odsPath; computing load-max-dw-id with an agg job")
+        ods.agg(max(col(idCol))).first() match {
+          case r if r.isNullAt(0) => 0L
+          case r => r.getLong(0)
+        }
+      }
     }
     val keyed = Relational.surrogateKeysOrdered(merged, idCol, orderCol,
       maxId)
-    // 5. staged write + atomic publish (replace-into-ods)
+    // 5. staged write + atomic publish (replace-into-ods); the returned
+    // count is the published ods's footer row count, not a read-back
     val staged = odsPath + "__staged"
     keyed.write.mode("overwrite").parquet(staged)
     TableOps.replaceInto(staged, odsPath)
-    spark.read.parquet(odsPath).count()
+    Tables.parquetRowCount(odsPath, conf)
   }
 
   /** EP-1: the report-job `-main` lifecycle over the JDBC report sink

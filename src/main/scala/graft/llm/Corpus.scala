@@ -247,15 +247,14 @@ object Corpus {
     * Output: input columns + (pos: long starting at 1, shard: long).
     */
   def shuffleShard(df: DataFrame, keyCol: Column, nShards: Int,
-                   seed: String = "graft",
-                   nPartitions: Int = 32): DataFrame = {
+                   seed: String = "graft"): DataFrame = {
     require(nShards > 0, s"nShards must be > 0, got $nShards")
     val staged = df.withColumn("__h",
       md5(concat(keyCol.cast("string"), lit(seed))))
-    // nPartitions sizes the range-repartitioned numbering stage — raise
-    // it with the corpus so no task sorts more than ~a few GB
-    Relational.globalRowNumber(staged, Seq(col("__h"), keyCol), "pos",
-        nPartitions)
+    // the range-repartitioned numbering stage runs at the session's
+    // shuffle width — raise spark.sql.shuffle.partitions with the
+    // corpus so no task sorts more than ~a few GB
+    Relational.globalRowNumber(staged, Seq(col("__h"), keyCol), "pos")
       .withColumn("shard", pmod(col("pos") - 1, lit(nShards.toLong)))
       .drop("__h")
   }
@@ -266,9 +265,8 @@ object Corpus {
     * a partitioned write (the layout a data loader consumes
     * sequentially per worker). */
   def writeShards(df: DataFrame, keyCol: Column, nShards: Int,
-                  path: String, seed: String = "graft",
-                  nPartitions: Int = 32): Unit = {
-    val sharded = shuffleShard(df, keyCol, nShards, seed, nPartitions)
+                  path: String, seed: String = "graft"): Unit = {
+    val sharded = shuffleShard(df, keyCol, nShards, seed)
     sharded
       // RANGE repartition on the shard key ALONE: equal keys always
       // land in one task, so each shard=K dir gets exactly ONE file

@@ -127,6 +127,22 @@ class CorpusSpec extends AnyFunSuite {
     assert(out.sortBy(_._2).map(_._1).take(20).toSeq != (0L until 20L).toSeq)
   }
 
+  test("shuffleShard: (id, pos, shard) do not depend on the session's " +
+       "shuffle width") {
+    def shards(s: org.apache.spark.sql.SparkSession) = {
+      import s.implicits._
+      Corpus.shuffleShard(s.range(0L, 1000L).toDF("id"), col("id"),
+          nShards = 8)
+        .select($"id", $"pos", $"shard").as[(Long, Long, Long)]
+        .collect().sortBy(_._1).toSeq
+    }
+    // a sibling session, so the width change stays out of the shared one
+    val wide = spark.newSession()
+    wide.conf.set("spark.sql.shuffle.partitions", "13")
+    val atSession = shards(spark)
+    assert(atSession.size == 1000 && atSession == shards(wide))
+  }
+
   test("rateSample: monotone in rate (kept sets nest), exact at 0 and 1") {
     val ids = (0L until 2000L).toDF("id")
     def kept(r: Double): Set[Long] =

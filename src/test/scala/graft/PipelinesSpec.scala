@@ -51,6 +51,87 @@ class PipelinesSpec extends AnyFunSuite {
     assert(spark.read.parquet(rngPath).count() == 2)
   }
 
+  private def merge(stg: org.apache.spark.sql.DataFrame, ods: String,
+                    rng: String): Long =
+    Pipelines.odsMerge(spark, stg, ods, Seq("k"), Seq("v", "dt"), "dw_id",
+      "k", "dt", rng)
+
+  test("odsMerge: three loads keep window-form ids, return the published " +
+       "count and publish at most shuffle-partitions files") {
+    import org.apache.spark.sql.expressions.Window
+    val base = TestSpark.tmpPath("ods_multi").toString
+    val ods = s"$base/ods"; val rng = s"$base/rng"
+    val width = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    // overlapping key ranges: each load updates some keys and adds new
+    // ones; k is unique per load and is the numbering order
+    val loads = Seq((0L, 300L), (200L, 520L), (100L, 700L))
+    var prev = Map.empty[Long, Long]
+    for (((lo, hi), i) <- loads.zipWithIndex) {
+      val stg = spark.range(lo, hi).select(($"id" * 7919 % 1000003).as("k"),
+        concat(lit(s"v$i-"), $"id".cast("string")).as("v"),
+        lit(s"2016-01-0${i + 1}").as("dt"))
+      val n = merge(stg, ods, rng)
+      // window-form reference over the merged key set: surviving ids
+      // kept, new keys numbered from max in k order
+      val maxPrev = if (prev.isEmpty) 0L else prev.values.max
+      val ref = stg.select("k").union(prev.keys.toSeq.toDF("k")).distinct()
+        .join(prev.toSeq.toDF("k", "dw_id"), Seq("k"), "left")
+        .withColumn("dw_id", coalesce($"dw_id", lit(maxPrev) +
+          row_number().over(Window.partitionBy($"dw_id".isNull)
+            .orderBy($"k"))))
+        .as[(Long, Long)].collect().toMap
+      val out = spark.read.parquet(ods).select("k", "dw_id")
+        .as[(Long, Long)].collect().toMap
+      assert(out == ref, s"load $i ids")
+      assert(n == spark.read.parquet(ods).count(), s"load $i count")
+      val files = new java.io.File(ods).listFiles()
+        .count(_.getName.endsWith(".parquet"))
+      assert(files >= 1 && files <= width,
+        s"load $i published $files files at width $width")
+      prev = out
+    }
+    assert(prev.size == 700)
+  }
+
+  test("odsMerge: an ods without footer stats falls back to the max agg") {
+    val base = TestSpark.tmpPath("ods_nostats").toString
+    val ods = s"$base/ods"; val rng = s"$base/rng"
+    spark.range(1, 501).select($"id".as("k"),
+        concat(lit("v"), $"id".cast("string")).as("v"),
+        lit("2016-01-01").as("dt"), $"id".as("dw_id"))
+      .write.option("parquet.column.statistics.enabled", "false")
+      .parquet(ods)
+    // precondition: the footers cannot answer max(dw_id)
+    assert(graft.core.Tables.parquetLongMax(ods,
+      spark.sessionState.newHadoopConf(), "dw_id").isEmpty)
+    val n = merge(Seq((1000L, "new", "2016-01-02")).toDF("k", "v", "dt"),
+      ods, rng)
+    assert(n == 501)
+    val ids = spark.read.parquet(ods).select("k", "dw_id")
+      .as[(Long, Long)].collect().toMap
+    assert(ids(1000L) == 501L && ids(500L) == 500L)
+  }
+
+  test("odsMerge: a part file without the .parquet suffix still sets " +
+       "load-max-dw-id") {
+    val base = TestSpark.tmpPath("ods_nosuffix").toString
+    val ods = s"$base/ods"; val rng = s"$base/rng"
+    spark.range(1, 501).repartitionByRange(2, $"id").select($"id".as("k"),
+        concat(lit("v"), $"id".cast("string")).as("v"),
+        lit("2016-01-01").as("dt"), $"id".as("dw_id"))
+      .write.parquet(ods)
+    // Hive-style name for the part file holding the top of the id range
+    val top = new java.io.File(ods).listFiles()
+      .filter(_.getName.endsWith(".parquet")).maxBy(_.getName)
+    assert(top.renameTo(new java.io.File(ods, "000001_0")))
+    assert(spark.read.parquet(ods).agg(max("dw_id")).first().getLong(0)
+      == 500L)
+    merge(Seq((1000L, "new", "2016-01-02")).toDF("k", "v", "dt"), ods, rng)
+    val ids = spark.read.parquet(ods).select("k", "dw_id")
+      .as[(Long, Long)].collect().toMap
+    assert(ids(1000L) == 501L && ids.size == 501)
+  }
+
   test("order_show_debut flow: delta/shadow/switch with map-union merge") {
     // reference model/d_bolome_order_show_debut.clj:61-99: merge a delta
     // snapshot into the current one — union the per-key date sets, keep

@@ -107,6 +107,22 @@ class TablesSpec extends AnyFunSuite {
     } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
   }
 
+  test("footer figures read a visible part file without the .parquet " +
+       "suffix, as Spark's reader does") {
+    val dir = TestSpark.tmpPath("ts_nosuffix")
+    try {
+      val out = dir.resolve("t").toString
+      spark.range(0, 300).repartitionByRange(2, col("id")).write.parquet(out)
+      val top = Files.list(Paths.get(out)).filter(p =>
+        p.getFileName.toString.endsWith(".parquet")).toArray
+        .map(_.asInstanceOf[java.nio.file.Path]).maxBy(_.getFileName.toString)
+      Files.move(top, top.resolveSibling("000001_0"))
+      assert(spark.read.parquet(out).count() == 300L)
+      assert(Tables.parquetRowCount(out, hconf) == 300L)
+      assert(Tables.parquetLongMax(out, hconf, "id") == Some(299L))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
+
   test("stagedWriteCount rises by exactly one per staged write") {
     Tables.stagedScope {
       val df = spark.range(0, 20).select(col("id"),

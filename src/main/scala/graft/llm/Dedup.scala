@@ -441,10 +441,11 @@ object Dedup {
     * where comp = min id of the component (the id column's NATIVE
     * ordering — lexicographic for string/uuid ids; no silent long cast,
     * which used to null out non-numeric ids and corrupt the whole
-    * result); singletons (ids not in any pair) are not emitted. */
+    * result); singletons (ids not in any pair) are not emitted. Graphs
+    * of at most `spark.graft.driverPath.maxRows` nodes skip the loop
+    * for an exact driver-side union-find (`Graph.driverPath`). */
   def connectedComponents(pairs: DataFrame,
-                          maxIters: Int = 40,
-                          smallCutoff: Long = 100000L): DataFrame = {
+                          maxIters: Int = 40): DataFrame = {
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val edges = pairs
       .select(col("id1").as("src"), col("id2").as("dst"))
@@ -469,56 +470,26 @@ object Dedup {
       edges.groupBy(col("src"))
         .agg(least(col("src"), min(col("dst"))).as("comp"))
         .select(col("src").as("id"), col("comp")), "cc_labels")
-    // small-graph fast path (r17, the sccCensus/rank-family gate): the
-    // node count is free from the init staging write's footers; at or
-    // below the cutoff, one distinct+collect of the edge set replaces
-    // the whole pointer-jumping loop with an exact driver union-find —
-    // comp = min member in Spark's own ordering (Graph.nodeLt), the
-    // same semantic id the loop converges to, bit-identical (LlmSpec
-    // pins both paths). Null ids keep the loop's join/least semantics
-    // by falling through to the distributed path; big graphs take it
-    // unchanged.
+    // small-graph fast path (r17, Graph.driverPath): the node count is
+    // free from the init staging write's footers; at or below
+    // spark.graft.driverPath.maxRows, one distinct+collect of the edge
+    // set replaces the whole pointer-jumping loop with an exact driver
+    // union-find (Graph.SmallDigraph) — comp = min member in Spark's own
+    // ordering, the same semantic id the loop converges to,
+    // bit-identical (LlmSpec pins both paths). Null ids keep the loop's
+    // join/least semantics by falling through to the distributed path;
+    // big graphs take it unchanged.
     val idT = labels0.schema("id").dataType
-    if (nNodes <= smallCutoff && graft.ops.Graph.driverableNodeType(idT)) {
+    if (graft.ops.Graph.driverPath(pairs.sparkSession, nNodes, idT)) {
       val rows = edges.distinct().collect()
       if (!rows.exists(r => r.isNullAt(0) || r.isNullAt(1))) {
         edges.unpersist()
-        val ids = new java.util.HashMap[Any, Integer]()
-        val vals = scala.collection.mutable.ArrayBuffer[Any]()
-        def intern(v: Any): Int = {
-          val got = ids.get(v)
-          if (got != null) got.intValue()
-          else { ids.put(v, vals.length); vals += v; vals.length - 1 }
-        }
-        val es = rows.map(r => (intern(r.get(0)), intern(r.get(1))))
-        val n = vals.length
-        val parent = Array.tabulate(n)(identity)
-        def find(x: Int): Int = {
-          var r = x
-          while (parent(r) != r) r = parent(r)
-          var c = x
-          while (parent(c) != r) {
-            val nx = parent(c); parent(c) = r; c = nx
-          }
-          r
-        }
-        es.foreach { case (a, b) =>
-          val (ra, rb) = (find(a), find(b))
-          if (ra != rb) parent(ra) = rb
-        }
-        val compMin = new java.util.HashMap[Int, Any]()
+        val g = new graft.ops.Graph.SmallDigraph(rows)
+        val comp = g.weakComponentMins
+        val out = new java.util.ArrayList[org.apache.spark.sql.Row](g.n)
         var i = 0
-        while (i < n) {
-          val r = find(i); val v = vals(i)
-          val cur = compMin.get(r)
-          if (cur == null || graft.ops.Graph.nodeLt(v, cur))
-            compMin.put(r, v)
-          i += 1
-        }
-        val out = new java.util.ArrayList[org.apache.spark.sql.Row](n)
-        i = 0
-        while (i < n) {
-          out.add(org.apache.spark.sql.Row(vals(i), compMin.get(find(i))))
+        while (i < g.n) {
+          out.add(org.apache.spark.sql.Row(g.vals(i), comp(i)))
           i += 1
         }
         return pairs.sparkSession.createDataFrame(out,

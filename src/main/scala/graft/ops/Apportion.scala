@@ -28,7 +28,10 @@ object Apportion {
     * remainders map-side, and the +1 election rides the two-phase
     * [[Relational.globalRowNumber]] — no single-partition window.
     * The input is staged once (it feeds both the aggregate and the
-    * ranked projection).
+    * ranked projection). Inputs of at most
+    * `spark.graft.driverPath.maxRows` rows with string/integer keys
+    * run the same arithmetic on the collected rows instead
+    * ([[Graph.driverPath]]).
     *
     * Output: keyCols ++ (weightCol, quota). */
   /** Epoch-capped apportionment — exact water-filling: split `total`
@@ -70,13 +73,15 @@ object Apportion {
     * window, so this holds for per-DOMAIN caps (millions of rows),
     * not just per-source config tables. Driver fetches: the stats
     * row, the per-partition subtotal array, the stop rank, and the
-    * saturated-cap sum.
+    * saturated-cap sum. Inputs of at most
+    * `spark.graft.driverPath.maxRows` rows with string/integer keys
+    * run the same water-fill on the collected rows instead
+    * ([[Graph.driverPath]]).
     *
     * Output: keyCols ++ (weightCol, capCol, quota). */
   def cappedLargestRemainder(df: DataFrame, keyCols: Seq[String],
                              weightCol: String, capCol: String,
-                             total: Long,
-                             smallCutoff: Long = 100000L): DataFrame = {
+                             total: Long): DataFrame = {
     require(total >= 0, s"total must be >= 0: $total")
     val lim = 1L << 53
     val (w0, nRows0) = graft.core.Tables.stagedCounted(
@@ -89,8 +94,8 @@ object Apportion {
     // saturation compare, and the SAME driver Hamilton election on the
     // unsaturated suffix — bit-identical to the staged chain
     // (ApportionSpec pins both paths). Null weights/caps fall through.
-    if (nRows0 <= smallCutoff && driverableKeys(w0, keyCols) &&
-        nRows0 > 0) {
+    if (Graph.driverPath(df.sparkSession, nRows0,
+          keyCols.map(w0.schema(_).dataType): _*) && nRows0 > 0) {
       val nK = keyCols.length
       val rows = w0.collect()
       if (!rows.exists(r => r.isNullAt(nK) || r.isNullAt(nK + 1))) {
@@ -317,10 +322,6 @@ object Apportion {
     0
   }
 
-  private def driverableKeys(df: DataFrame, keyCols: Seq[String]): Boolean =
-    keyCols.forall(k =>
-      graft.ops.Graph.driverableNodeType(df.schema(k).dataType))
-
   /** Exact driver-side Hamilton apportionment over collected
     * (keyCols…, __w) rows — the same floors/remainders/overflow guards
     * and the same (remainder desc, keyCols asc) +1 election as the
@@ -354,8 +355,7 @@ object Apportion {
   }
 
   def largestRemainder(df: DataFrame, keyCols: Seq[String],
-                       weightCol: String, total: Long,
-                       smallCutoff: Long = 100000L): DataFrame = {
+                       weightCol: String, total: Long): DataFrame = {
     require(total >= 0, s"total must be >= 0: $total")
     val (w, nRows) = graft.core.Tables.stagedCounted(
       df.select((keyCols.map(col) :+
@@ -368,7 +368,8 @@ object Apportion {
     // two-phase rank. Null weights keep the plan's null algebra by
     // falling through to the distributed path; big inputs take it
     // unchanged.
-    if (nRows <= smallCutoff && driverableKeys(w, keyCols) && nRows > 0) {
+    if (Graph.driverPath(df.sparkSession, nRows,
+          keyCols.map(w.schema(_).dataType): _*) && nRows > 0) {
       val rows = w.collect()
       if (!rows.exists(_.isNullAt(keyCols.length))) {
         val quota = hamiltonDriverSide(rows, keyCols.length, total)

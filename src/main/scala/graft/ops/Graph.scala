@@ -39,10 +39,9 @@ object Graph {
     * a null endpoint are dropped before anything else (a null node is
     * a parse failure upstream, not a vertex). */
   def pageRankScaled(edges: DataFrame, srcCol: String, dstCol: String,
-                     iterations: Int,
-                     smallCutoff: Long = 100000L): DataFrame =
+                     iterations: Int): DataFrame =
     pageRankRun(edges, srcCol, dstCol, iterations, prior = None,
-      eps = None, smallCutoff = smallCutoff)._1
+      eps = None)._1
 
   /** Convergence-stopped PageRank: run [[pageRankScaled]] iterations
     * until the integer L1 delta Σ_v |r_i(v) − r_{i−1}(v)| drops below
@@ -66,11 +65,10 @@ object Graph {
     * the stop point. */
   def pageRankScaledConverged(edges: DataFrame, srcCol: String,
                               dstCol: String, eps: Long,
-                              maxIters: Int,
-                              smallCutoff: Long = 100000L): DataFrame = {
+                              maxIters: Int): DataFrame = {
     require(eps > 0, s"eps must be > 0: $eps")
     val (ranks, it) = pageRankRun(edges, srcCol, dstCol, maxIters,
-      prior = None, eps = Some(eps), smallCutoff = smallCutoff)
+      prior = None, eps = Some(eps))
     ranks.withColumn("iters", lit(it))
   }
 
@@ -85,11 +83,10 @@ object Graph {
     * Output: (node, rank_s, iters). */
   def pageRankScaledResumeConverged(edges: DataFrame, srcCol: String,
                                     dstCol: String, prior: DataFrame,
-                                    eps: Long, maxIters: Int,
-                                    smallCutoff: Long = 100000L): DataFrame = {
+                                    eps: Long, maxIters: Int): DataFrame = {
     require(eps > 0, s"eps must be > 0: $eps")
     val (ranks, it) = pageRankRun(edges, srcCol, dstCol, maxIters,
-      prior = Some(prior), eps = Some(eps), smallCutoff = smallCutoff)
+      prior = Some(prior), eps = Some(eps))
     ranks.withColumn("iters", lit(it))
   }
 
@@ -107,10 +104,9 @@ object Graph {
     * [[pageRankScaled]]'s. */
   def pageRankScaledResume(edges: DataFrame, srcCol: String,
                            dstCol: String, prior: DataFrame,
-                           iterations: Int,
-                           smallCutoff: Long = 100000L): DataFrame =
+                           iterations: Int): DataFrame =
     pageRankRun(edges, srcCol, dstCol, iterations, Some(prior),
-      eps = None, smallCutoff = smallCutoff)._1
+      eps = None)._1
 
   /** Personalized (topic-sensitive) PageRank in the same scaled-Long
     * exact arithmetic: the 15% teleport mass and the dangling mass
@@ -127,8 +123,7 @@ object Graph {
     * dangling set; the per-iteration dangling aggregate rides the
     * same broadcast fusion). */
   def personalizedPageRankScaled(edges: DataFrame, srcCol: String,
-      dstCol: String, seeds: DataFrame, iterations: Int,
-      smallCutoff: Long = 100000L): DataFrame = {
+      dstCol: String, seeds: DataFrame, iterations: Int): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1: $iterations")
     val spark = edges.sparkSession
     val (e, nEdges) = graft.core.Tables.stagedCounted(
@@ -139,7 +134,7 @@ object Graph {
     // driver-side replica — see pageRankRun's scaladoc. The seed set
     // is semi-joined against the small node set BEFORE collecting, so
     // the driver fetch stays node-bounded whatever the seed table is.
-    if (nEdges <= smallCutoff && driverableNodeType(edgeT)) {
+    if (driverPath(spark, nEdges, edgeT)) {
       val g = new SmallDigraph(e.collect())
       val seedRows = seeds
         .select(col(seeds.columns.head).as("node"))
@@ -247,8 +242,7 @@ object Graph {
     * the same broadcast 1-row fusion. */
   def pageRankScaledWeighted(edges: DataFrame, srcCol: String,
                              dstCol: String, weightCol: String,
-                             iterations: Int,
-                             smallCutoff: Long = 100000L): DataFrame = {
+                             iterations: Int): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1: $iterations")
     val spark = edges.sparkSession
     val e0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
@@ -265,8 +259,7 @@ object Graph {
     // driver-side replica — see pageRankRun's scaladoc. The guards run
     // on the collected pairs (same predicates, same messages) instead
     // of the 1-row aggregate job.
-    if (nPairs <= smallCutoff &&
-        driverableNodeType(pairs.schema("src").dataType)) {
+    if (driverPath(spark, nPairs, pairs.schema("src").dataType)) {
       val rows = pairs.select("src", "dst", "__c", "__wmin", "w").collect()
       if (rows.nonEmpty) {
         var maxC = Long.MinValue
@@ -387,8 +380,7 @@ object Graph {
     *
     * Output: (node, auth_s, hub_s). */
   def hitsScaled(edges: DataFrame, srcCol: String, dstCol: String,
-                 iterations: Int,
-                 smallCutoff: Long = 100000L): DataFrame = {
+                 iterations: Int): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1: $iterations")
     val spark = edges.sparkSession
     val (e, nEdges) = graft.core.Tables.stagedCounted(
@@ -400,7 +392,7 @@ object Graph {
     // a_raw/h_raw rows exist exactly for nodes with in-/out-edges and
     // absent rows contribute 0 to every sum, so plain 0-initialized
     // arrays reproduce the staged tables' sums bit-for-bit.
-    if (nEdges <= smallCutoff && driverableNodeType(edgeT)) {
+    if (driverPath(spark, nEdges, edgeT)) {
       val g = new SmallDigraph(e.collect())
       require(g.n > 0, "hitsScaled: empty graph")
       var aR = new Array[Long](g.n)
@@ -600,8 +592,7 @@ object Graph {
     * Output: (node, label) — label null for never-reached nodes. */
   def seededLabelPropagation(edges: DataFrame, srcCol: String,
                              dstCol: String, seeds: DataFrame,
-                             iterations: Int,
-                             smallCutoff: Long = 100000L): DataFrame = {
+                             iterations: Int): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1: $iterations")
     val labelCap = 1L << 20
     val spark = edges.sparkSession
@@ -617,7 +608,7 @@ object Graph {
     // cast no vote, exactly the labels-join semantics), unreached
     // nodes emit null. Seed guards run on the collected (node-bounded
     // via the semi-join) seed rows with the same predicates/messages.
-    if (nUnd <= smallCutoff && driverableNodeType(undT)) {
+    if (driverPath(spark, nUnd, undT)) {
       val g = new SmallDigraph(und.collect())
       val seedRows = seeds
         .select(col(seeds.columns(0)).as("node"),
@@ -847,8 +838,7 @@ object Graph {
     *
     * Output: (node, cls), cls ∈ {SCC, IN, OUT, TUBE, TENDRIL, DISC}. */
   def bowTie(edges: DataFrame, srcCol: String, dstCol: String,
-             maxRounds: Int = 64,
-             smallCutoff: Long = 100000L): DataFrame = {
+             maxRounds: Int = 64): DataFrame = {
     require(maxRounds >= 1, s"maxRounds must be >= 1: $maxRounds")
     val spark = edges.sparkSession
     val hconf = spark.sessionState.newHadoopConf()
@@ -862,7 +852,7 @@ object Graph {
     // comparisons, so the driver replica (INCLUDING the maxRounds
     // depth cap and its loud degradation warning) is bit-identical to
     // the staged walks. Big graphs take the staged walks as before.
-    if (nEdgesBt <= smallCutoff && driverableNodeType(edgeTBt)) {
+    if (driverPath(spark, nEdgesBt, edgeTBt)) {
       val g = new SmallDigraph(e.collect())
       require(g.n > 0, "bowTie: empty graph")
       val deg = new Array[Long](g.n)
@@ -1152,8 +1142,7 @@ object Graph {
     * Output: (node, wcc_id, scc_id). */
   def sccCensus(edges: DataFrame, srcCol: String, dstCol: String,
                 maxOuterRounds: Int = 32,
-                maxIters: Int = 64,
-                smallCutoff: Long = 100000L): DataFrame = {
+                maxIters: Int = 64): DataFrame = {
     require(maxOuterRounds >= 1,
       s"maxOuterRounds must be >= 1: $maxOuterRounds")
     require(maxIters >= 1, s"maxIters must be >= 1: $maxIters")
@@ -1177,13 +1166,7 @@ object Graph {
     // bounded-driver-fetch class as the incremental path's collect.
     // The edge count is already free (the staging write's footers).
     // Big graphs take the distributed drain exactly as before.
-    val fastPathOk = edgeT match {
-      case org.apache.spark.sql.types.StringType |
-           org.apache.spark.sql.types.LongType |
-           org.apache.spark.sql.types.IntegerType => true
-      case _ => false
-    }
-    if (nEdges <= smallCutoff && fastPathOk)
+    if (driverPath(spark, nEdges, edgeT))
       return censusDriverSide(e, edgeT)
     val (nodes, nNodes) = graft.core.Tables.stagedCounted(
       e.select(col("src").as("node"))
@@ -1475,23 +1458,20 @@ object Graph {
     * Small-subgraph fast path: the distributed census's cost floor is
     * its ROUND COUNT (tens of tiny staged jobs — right when the
     * touched subgraph is large, pure orchestration overhead when a
-    * daily delta touches a sliver). When the affected subgraph has
-    * ≤ `smallCutoff` edges (known free from the staging write's
-    * footer count) and the node type is string/integer, it is
-    * collected and labeled DRIVER-SIDE — union-find for wcc,
-    * iterative Tarjan for scc, min-member ids under the SAME ordering
-    * Spark's min uses (UTF-8 byte order for strings) — so both paths
-    * produce bit-identical output (GraphSpec pins it) and the common
-    * incremental case costs one bounded collect instead of a full
-    * census round structure. The default cutoff keeps the collect in
-    * the same bounded-driver-fetch class as the guarded config
-    * fetches. */
+    * daily delta touches a sliver). When [[driverPath]] admits the
+    * affected subgraph (≤ `spark.graft.driverPath.maxRows` edges,
+    * known free from the staging write's footer count, and a
+    * string/integer node type), it is collected and labeled
+    * DRIVER-SIDE — union-find for wcc, iterative Tarjan for scc,
+    * min-member ids under the SAME ordering Spark's min uses (UTF-8
+    * byte order for strings) — so both paths produce bit-identical
+    * output (GraphSpec pins it) and the common incremental case costs
+    * one bounded collect instead of a full census round structure. */
   def sccCensusIncremental(edges: DataFrame, srcCol: String,
                            dstCol: String, delta: DataFrame,
                            prior: DataFrame,
                            maxOuterRounds: Int = 32,
-                           maxIters: Int = 64,
-                           smallCutoff: Long = 100000L): DataFrame = {
+                           maxIters: Int = 64): DataFrame = {
     // prior is NOT re-staged: every caller hands a materialized table
     // (the streaming ingest reads it straight from parquet), so a
     // staging write would be pure overhead on the op's fixed-cost
@@ -1536,12 +1516,6 @@ object Graph {
       ew.join(affected, Seq("ent"), "left_semi")
         .select("src", "dst").distinct(), "scci_sub")
     val nodeType = sub.schema("src").dataType
-    val driverable = nodeType match {
-      case org.apache.spark.sql.types.StringType |
-           org.apache.spark.sql.types.LongType |
-           org.apache.spark.sql.types.IntegerType => true
-      case _ => false
-    }
     val recomputed =
       if (nSub == 0)
         prior.sparkSession.createDataFrame(
@@ -1550,12 +1524,9 @@ object Graph {
             org.apache.spark.sql.types.StructField("node", nodeType),
             org.apache.spark.sql.types.StructField("wcc_id", nodeType),
             org.apache.spark.sql.types.StructField("scc_id", nodeType))))
-      else if (nSub <= smallCutoff && driverable)
+      else if (driverPath(prior.sparkSession, nSub, nodeType))
         censusDriverSide(sub, nodeType)
-      // pass the caller's cutoff through so the inner census's own
-      // fast-path gate agrees with the decision just made here
-      else sccCensus(sub, "src", "dst", maxOuterRounds, maxIters,
-        smallCutoff)
+      else sccCensus(sub, "src", "dst", maxOuterRounds, maxIters)
     val carried = pw.join(
       affected.select(col("ent").as("wcc_id")), Seq("wcc_id"),
       "left_anti")
@@ -1564,52 +1535,23 @@ object Graph {
   }
 
   /** [[sccCensusIncremental]]'s bounded driver-side census: exact
-    * union-find wcc + ITERATIVE Tarjan scc (explicit frame stack — a
-    * 100k-edge chain must not blow the JVM stack) over a collected
-    * edge list, with min-member ids compared in Spark's own order
-    * (UTF8 binary bytes for strings, natural for integers) so the
-    * result is bit-identical to the distributed census. */
+    * union-find wcc ([[SmallDigraph.weakComponentMins]]) + ITERATIVE
+    * Tarjan scc (explicit frame stack — a 100k-edge chain must not
+    * blow the JVM stack) over a collected edge list, with min-member
+    * ids compared in Spark's own order ([[nodeLt]]) so the result is
+    * bit-identical to the distributed census. */
   private def censusDriverSide(
       sub: DataFrame,
       nodeType: org.apache.spark.sql.types.DataType): DataFrame = {
     val spark = sub.sparkSession
-    def lt(a: Any, b: Any): Boolean = (a, b) match {
-      case (x: String, y: String) => java.util.Arrays.compareUnsigned(
-        x.getBytes(java.nio.charset.StandardCharsets.UTF_8),
-        y.getBytes(java.nio.charset.StandardCharsets.UTF_8)) < 0
-      case (x: Long, y: Long) => x < y
-      case (x: Int, y: Int)   => x < y
-      case _ => throw new IllegalStateException(
-        s"censusDriverSide: unsupported node values $a / $b")
-    }
-    val edgeRows = sub.collect()
-    val ids = new java.util.HashMap[Any, Integer]()
-    val vals = scala.collection.mutable.ArrayBuffer[Any]()
-    def id(v: Any): Int = {
-      val got = ids.get(v)
-      if (got != null) got.intValue()
-      else { ids.put(v, vals.length); vals += v; vals.length - 1 }
-    }
-    val es = edgeRows.map(r => (id(r.get(0)), id(r.get(1))))
-    val n = vals.length
-    // wcc: union-find with path compression
-    val parent = Array.tabulate(n)(identity)
-    def find(x: Int): Int = {
-      var r = x
-      while (parent(r) != r) r = parent(r)
-      var c = x
-      while (parent(c) != r) { val nx = parent(c); parent(c) = r; c = nx }
-      r
-    }
-    es.foreach { case (a, b) =>
-      val (ra, rb) = (find(a), find(b))
-      if (ra != rb) parent(ra) = rb
-    }
+    val g = new SmallDigraph(sub.collect())
+    val n = g.n
     // scc: iterative Tarjan
     val adj = {
       val builders = Array.fill(n)(
         scala.collection.mutable.ArrayBuffer[Int]())
-      es.foreach { case (a, b) => builders(a) += b }
+      var j = 0
+      while (j < g.nE) { builders(g.src(j)) += g.dst(j); j += 1 }
       builders.map(_.toArray)
     }
     val idx = Array.fill(n)(-1)
@@ -1653,23 +1595,12 @@ object Graph {
       }
       root += 1
     }
-    // semantic ids: min member per group, in Spark's ordering
-    val wccMin = new java.util.HashMap[Int, Any]()
-    val sccMin = new java.util.HashMap[Int, Any]()
+    val wcc = g.weakComponentMins
+    val scc = g.minMembers(sccOf)
+    val rows = new java.util.ArrayList[org.apache.spark.sql.Row](n)
     var i = 0
     while (i < n) {
-      val w = find(i); val s = sccOf(i); val v = vals(i)
-      val cw = wccMin.get(w)
-      if (cw == null || lt(v, cw)) wccMin.put(w, v)
-      val cs = sccMin.get(s)
-      if (cs == null || lt(v, cs)) sccMin.put(s, v)
-      i += 1
-    }
-    val rows = new java.util.ArrayList[org.apache.spark.sql.Row](n)
-    i = 0
-    while (i < n) {
-      rows.add(org.apache.spark.sql.Row(
-        vals(i), wccMin.get(find(i)), sccMin.get(sccOf(i))))
+      rows.add(org.apache.spark.sql.Row(g.vals(i), wcc(i), scc(i)))
       i += 1
     }
     spark.createDataFrame(rows,
@@ -1810,8 +1741,7 @@ object Graph {
   def labelPropagationCommunities(edges: DataFrame, srcCol: String,
                                   dstCol: String,
                                   iterations: Int,
-                                  labelBits: Int = 20,
-                                  smallCutoff: Long = 100000L): DataFrame = {
+                                  labelBits: Int = 20): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1: $iterations")
     require(labelBits >= 1 && labelBits <= 31,
       s"labelBits must sit in [1, 31] (score = votes·2^B + label " +
@@ -1830,7 +1760,7 @@ object Graph {
     // (nodeLt), the same total order globalRowNumber realizes, and the
     // election max compares the identical (votes·2^B + residue)
     // packing, so every round's labels are bit-identical.
-    if (nUnd <= smallCutoff && driverableNodeType(undT)) {
+    if (driverPath(spark, nUnd, undT)) {
       val g = new SmallDigraph(und.collect())
       val nDrv = g.n.toLong
       require(nDrv > 0, "labelPropagationCommunities: empty graph")
@@ -1975,10 +1905,43 @@ object Graph {
         when(vr > 0.0, round(cov / vr, 6)).as("assortativity"))
   }
 
-  /** Spark's own ascending ordering for the node types the
-    * driver-side fast paths support — strings compare as UTF8String
-    * does (unsigned byte-lexicographic), exactly [[censusDriverSide]]'s
-    * comparator. */
+  /** The session conf that sizes every driver-side replica. */
+  private val DriverPathMaxRows = "spark.graft.driverPath.maxRows"
+
+  /** The one driver-path policy of the size-gated operators (the
+    * PageRank family, HITS, both label propagations, bow-tie, the SCC
+    * census, `Dedup.connectedComponents` and both `Apportion`
+    * methods): an input of `n` edges/rows — a count each operator
+    * already has from its staging write's footers — runs the exact
+    * driver-side replica when `n` is at most the session conf
+    * `spark.graft.driverPath.maxRows` (default 100000, which keeps the
+    * collect in the bounded-driver-fetch class) and every key column
+    * is a string or integer: value equality and ordering ([[nodeLt]])
+    * are engine-identical for those types, so each replica is
+    * bit-identical to its staged twin. Larger inputs take the staged
+    * loops; `0` sends every non-empty input there, which is how the
+    * specs and the oracle check the staged twins. A value that is not
+    * a non-negative long fails loudly, naming the key. */
+  private[graft] def driverPath(
+      spark: org.apache.spark.sql.SparkSession, n: Long,
+      keyTypes: org.apache.spark.sql.types.DataType*): Boolean = {
+    val limit = spark.conf.getOption(DriverPathMaxRows) match {
+      case None => 100000L
+      case Some(v) => v.toLongOption.filter(_ >= 0L).getOrElse(
+        throw new IllegalArgumentException(
+          s"$DriverPathMaxRows must be a non-negative long, got '$v'"))
+    }
+    n <= limit && keyTypes.forall {
+      case org.apache.spark.sql.types.StringType |
+           org.apache.spark.sql.types.LongType |
+           org.apache.spark.sql.types.IntegerType => true
+      case _ => false
+    }
+  }
+
+  /** Spark's own ascending ordering for the node types [[driverPath]]
+    * admits — strings compare as UTF8String does (unsigned
+    * byte-lexicographic). */
   private[graft] def nodeLt(a: Any, b: Any): Boolean = (a, b) match {
     case (x: String, y: String) => java.util.Arrays.compareUnsigned(
       x.getBytes(java.nio.charset.StandardCharsets.UTF_8),
@@ -1989,23 +1952,13 @@ object Graph {
       s"graph driver fast path: unsupported node values $a / $b")
   }
 
-  /** Node types the driver-side fast paths accept (the
-    * [[censusDriverSide]] set): value equality and ordering are
-    * engine-identical for these, so driver-side replicas of the
-    * integer/set algebra are bit-identical to the distributed drains. */
-  private[graft] def driverableNodeType(
-      t: org.apache.spark.sql.types.DataType): Boolean = t match {
-    case org.apache.spark.sql.types.StringType |
-         org.apache.spark.sql.types.LongType |
-         org.apache.spark.sql.types.IntegerType => true
-    case _ => false
-  }
-
-  /** A collected small digraph: node values interned to dense ints in
-    * first-appearance order (exactly [[censusDriverSide]]'s id scheme —
-    * the interning order never reaches a result, every output is keyed
-    * by node VALUE). Shared by the r17 size-gated driver fast paths. */
-  private final class SmallDigraph(
+  /** A collected small digraph (at most `spark.graft.driverPath.maxRows`
+    * edges, see [[driverPath]]): node values interned to dense ints in
+    * first-appearance order — the interning order never reaches a
+    * result, every output is keyed by node VALUE. The one graph kit of
+    * the driver-side replicas, `Dedup.connectedComponents` included.
+    * Edge rows carry (src, dst) in their first two fields, never null. */
+  private[graft] final class SmallDigraph(
       edgeRows: Array[org.apache.spark.sql.Row]) {
     private val ids = new java.util.HashMap[Any, Integer]()
     val vals = scala.collection.mutable.ArrayBuffer[Any]()
@@ -2029,6 +1982,39 @@ object Graph {
     def idOf(v: Any): Int = {
       val got = ids.get(v)
       if (got == null) -1 else got.intValue()
+    }
+    /** Each node's weak-component id (indexed like `vals`): the
+      * component's least member under [[nodeLt]] — the semantic id the
+      * staged min-label loops converge to. Union-find with path
+      * compression, edge direction ignored. */
+    def weakComponentMins: Array[Any] = {
+      val parent = Array.tabulate(n)(identity)
+      def find(x: Int): Int = {
+        var r = x
+        while (parent(r) != r) r = parent(r)
+        var c = x
+        while (parent(c) != r) { val nx = parent(c); parent(c) = r; c = nx }
+        r
+      }
+      var i = 0
+      while (i < nE) {
+        val (ra, rb) = (find(src(i)), find(dst(i)))
+        if (ra != rb) parent(ra) = rb
+        i += 1
+      }
+      minMembers(Array.tabulate(n)(find))
+    }
+    /** Each node's group id — the least member under [[nodeLt]] of its
+      * group, where `groupOf(v)` ∈ [0, n) labels node v's group. */
+    def minMembers(groupOf: Array[Int]): Array[Any] = {
+      val least = Array.fill(n)(-1)
+      var v = 0
+      while (v < n) {
+        val m = least(groupOf(v))
+        if (m < 0 || nodeLt(vals(v), vals(m))) least(groupOf(v)) = v
+        v += 1
+      }
+      Array.tabulate(n)(v => vals(least(groupOf(v))))
     }
     /** 1-column (node) frame of the node set — the bounded probe the
       * fast paths semi-join caller-supplied side tables (prior ranks,
@@ -2136,8 +2122,9 @@ object Graph {
     * ranks (delta column dropped) and the realized iteration count.
     *
     * Small-graph fast path (r17, the [[sccCensus]] gate): graphs with
-    * ≤ `smallCutoff` edges — the count is free from the edge staging
-    * write's footers — run the exact driver-side replica
+    * ≤ `spark.graft.driverPath.maxRows` edges ([[driverPath]]) — the
+    * count is free from the edge staging write's footers — run the
+    * exact driver-side replica
     * ([[pageRankDriverSide]]) instead of the staged loop, whose cost
     * floor is its per-iteration orchestration (staged write + read per
     * round). Big graphs take the staged loop exactly as before — a
@@ -2146,15 +2133,14 @@ object Graph {
   private def pageRankRun(edges: DataFrame, srcCol: String,
                           dstCol: String, iterations: Int,
                           prior: Option[DataFrame],
-                          eps: Option[Long],
-                          smallCutoff: Long): (DataFrame, Int) = {
+                          eps: Option[Long]): (DataFrame, Int) = {
     require(iterations >= 1, s"iterations must be >= 1: $iterations")
     val spark = edges.sparkSession
     val (e, nEdges) = graft.core.Tables.stagedCounted(
       edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
         .na.drop().distinct(), "pagerank_edges")
     val edgeT = e.schema("src").dataType
-    if (nEdges <= smallCutoff && driverableNodeType(edgeT)) {
+    if (driverPath(spark, nEdges, edgeT)) {
       val g = new SmallDigraph(e.collect())
       require(g.n > 0, "pageRankScaled: empty graph")
       // prior ranks: bounded collect — semi-joined against the (small)

@@ -7,6 +7,7 @@ import graft.ops.Apportion
 class ApportionSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
+  import TestSpark.{stagedOnly, withConf}
 
   test("largestRemainder: quotas sum EXACTLY to total, each is floor " +
        "or floor+1, zero weights get zero") {
@@ -133,7 +134,7 @@ class ApportionSpec extends AnyFunSuite {
   }
 
   test("r17 driver fast paths equal the two-phase plans bit-for-bit " +
-       "(smallCutoff = 0 forces the staged path)") {
+       "(driverPath.maxRows = 0 forces the staged path)") {
     // adversarial spread: huge/tiny weights, remainder ties broken by
     // key, a zero weight
     val w = Seq(("a", 999999L), ("b", 1L), ("c", 333L), ("d", 333L),
@@ -141,8 +142,8 @@ class ApportionSpec extends AnyFunSuite {
     def m(df: org.apache.spark.sql.DataFrame) =
       df.select("k", "quota").as[(String, Long)].collect().toMap
     assert(m(Apportion.largestRemainder(w, Seq("k"), "n", 1000L)) ==
-      m(Apportion.largestRemainder(w, Seq("k"), "n", 1000L,
-        smallCutoff = 0L)))
+      withConf(stagedOnly)(
+        m(Apportion.largestRemainder(w, Seq("k"), "n", 1000L))))
     // water-fill: binding caps on the high-ratio rows, a zero cap,
     // and a suffix Hamilton stage
     val cw = Seq(("a", 100L, 3L), ("b", 10L, 500L), ("c", 50L, 20L),
@@ -151,15 +152,15 @@ class ApportionSpec extends AnyFunSuite {
       df.select("k", "quota").as[(String, Long)].collect().toMap
     val f = mc(Apportion.cappedLargestRemainder(cw, Seq("k"), "n",
       "cap", 60L))
-    val d = mc(Apportion.cappedLargestRemainder(cw, Seq("k"), "n",
-      "cap", 60L, smallCutoff = 0L))
+    val d = withConf(stagedOnly)(mc(Apportion.cappedLargestRemainder(
+      cw, Seq("k"), "n", "cap", 60L)))
     assert(f == d, s"capped fast path diverged: $f vs $d")
     // every cap binds (sum caps < total): all rows saturate at cap on
     // both paths
     val fAll = mc(Apportion.cappedLargestRemainder(cw, Seq("k"), "n",
       "cap", 100000L))
-    val dAll = mc(Apportion.cappedLargestRemainder(cw, Seq("k"), "n",
-      "cap", 100000L, smallCutoff = 0L))
+    val dAll = withConf(stagedOnly)(mc(Apportion.cappedLargestRemainder(
+      cw, Seq("k"), "n", "cap", 100000L)))
     assert(fAll == dAll && fAll == Map("a" -> 3L, "b" -> 500L,
       "c" -> 20L, "d" -> 0L, "e" -> 9L))
     // guards fire identically on the fast path

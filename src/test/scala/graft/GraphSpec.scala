@@ -8,6 +8,7 @@ import graft.ops.Graph
 class GraphSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
+  import TestSpark.{stagedOnly, withConf}
 
   test("pageRankScaled: one iteration matches the hand computation, " +
        "dangling mass redistributes uniformly, duplicate edges " +
@@ -435,11 +436,13 @@ class GraphSpec extends AnyFunSuite {
       ("w", "x"), ("x", "y"), ("y", "x"),
       ("a", "b"), (null.asInstanceOf[String], "a"))
       .toDF("src", "dst")
-    // smallCutoff = 0 forces the DISTRIBUTED drain (the r17 default
+    // maxRows = 0 forces the DISTRIBUTED drain (the r17 default
     // routes graphs this small through the driver-side fast path)
-    val out = Graph.sccCensus(edges, "src", "dst", smallCutoff = 0L)
-      .as[(String, String, String)].collect()
-      .map(t => t._1 -> (t._2, t._3)).toMap
+    val out = withConf(stagedOnly) {
+      Graph.sccCensus(edges, "src", "dst")
+        .as[(String, String, String)].collect()
+        .map(t => t._1 -> (t._2, t._3)).toMap
+    }
     assert(out == Map(
       "a" -> (("a", "a")), "b" -> (("a", "a")), "c" -> (("a", "a")),
       "d" -> (("a", "d")),
@@ -474,12 +477,14 @@ class GraphSpec extends AnyFunSuite {
       Seq((a, b), (b, a)) ++
         (if (i < n - 1) Seq((a, f"${i + 1}%02d_a")) else Nil)
     }
-    // smallCutoff = 0: this test exists to pin the DISTRIBUTED
+    // maxRows = 0: this test exists to pin the DISTRIBUTED
     // coloring discipline on the pathological chain
-    val out = Graph.sccCensus(pairs.toDF("src", "dst"), "src", "dst",
-        maxOuterRounds = 8, smallCutoff = 0L)
-      .as[(String, String, String)].collect()
-      .map(t => t._1 -> (t._2, t._3)).toMap
+    val out = withConf(stagedOnly) {
+      Graph.sccCensus(pairs.toDF("src", "dst"), "src", "dst",
+          maxOuterRounds = 8)
+        .as[(String, String, String)].collect()
+        .map(t => t._1 -> (t._2, t._3)).toMap
+    }
     val expected = (0 until n).flatMap { i =>
       Seq(f"$i%02d_a" -> (("00_a", f"$i%02d_a")),
         f"$i%02d_b" -> (("00_a", f"$i%02d_a")))
@@ -520,13 +525,16 @@ class GraphSpec extends AnyFunSuite {
     val inc = Graph.sccCensusIncremental(all, "src", "dst", delta,
         correctPrior)
       .as[(String, String, String)].collect().toSet
-    val incDist = Graph.sccCensusIncremental(all, "src", "dst", delta,
-        correctPrior, smallCutoff = 0L)
-      .as[(String, String, String)].collect().toSet
+    val incDist = withConf(stagedOnly) {
+      Graph.sccCensusIncremental(all, "src", "dst", delta, correctPrior)
+        .as[(String, String, String)].collect().toSet
+    }
     // distributed-path full census (cutoff 0) so the three-way check
     // spans both implementations
-    val full = Graph.sccCensus(all, "src", "dst", smallCutoff = 0L)
-      .as[(String, String, String)].collect().toSet
+    val full = withConf(stagedOnly) {
+      Graph.sccCensus(all, "src", "dst")
+        .as[(String, String, String)].collect().toSet
+    }
     assert(inc == full && incDist == full && inc == Set(
       ("a", "a", "a"), ("b", "a", "a"), ("c", "a", "c"),
       ("x", "x", "x"), ("y", "x", "x")))
@@ -602,8 +610,8 @@ class GraphSpec extends AnyFunSuite {
   }
 
   test("r17 driver fast paths equal the distributed loops bit-for-bit " +
-       "across the rank/election/bow-tie family (smallCutoff = 0 " +
-       "forces the staged path)") {
+       "across the rank/election/bow-tie family (driverPath.maxRows " +
+       "= 0 forces the staged path)") {
     // one fixture exercising every structural case the family
     // branches on: a 3-cycle, a dangling sink, a self-loop, a hub,
     // a disconnected pair, and a duplicate edge
@@ -615,51 +623,55 @@ class GraphSpec extends AnyFunSuite {
     def m(df: org.apache.spark.sql.DataFrame) =
       df.as[(String, Long)].collect().toMap
     assert(m(Graph.pageRankScaled(edges, "src", "dst", 5)) ==
-      m(Graph.pageRankScaled(edges, "src", "dst", 5, smallCutoff = 0L)))
+      withConf(stagedOnly)(m(Graph.pageRankScaled(edges, "src", "dst", 5))))
     // converged: the realized stop iteration must match too
     val cvF = Graph.pageRankScaledConverged(edges, "src", "dst",
         eps = 2000000000L, maxIters = 12)
       .as[(String, Long, Int)].collect().toSet
-    val cvD = Graph.pageRankScaledConverged(edges, "src", "dst",
-        eps = 2000000000L, maxIters = 12, smallCutoff = 0L)
-      .as[(String, Long, Int)].collect().toSet
+    val cvD = withConf(stagedOnly) {
+      Graph.pageRankScaledConverged(edges, "src", "dst",
+          eps = 2000000000L, maxIters = 12)
+        .as[(String, Long, Int)].collect().toSet
+    }
     assert(cvF == cvD, s"converged diverged: $cvF vs $cvD")
     // warm start: prior from a SUBSET graph (new nodes take the
     // uniform seed on both paths)
     val prior = Graph.pageRankScaled(
       edges.filter(col("src") =!= "hub"), "src", "dst", 3)
     assert(m(Graph.pageRankScaledResume(edges, "src", "dst", prior, 2))
-      == m(Graph.pageRankScaledResume(edges, "src", "dst", prior, 2,
-        smallCutoff = 0L)))
+      == withConf(stagedOnly)(
+        m(Graph.pageRankScaledResume(edges, "src", "dst", prior, 2))))
     val rcF = Graph.pageRankScaledResumeConverged(edges, "src", "dst",
         prior, eps = 2000000000L, maxIters = 12)
       .as[(String, Long, Int)].collect().toSet
-    val rcD = Graph.pageRankScaledResumeConverged(edges, "src", "dst",
-        prior, eps = 2000000000L, maxIters = 12, smallCutoff = 0L)
-      .as[(String, Long, Int)].collect().toSet
+    val rcD = withConf(stagedOnly) {
+      Graph.pageRankScaledResumeConverged(edges, "src", "dst",
+          prior, eps = 2000000000L, maxIters = 12)
+        .as[(String, Long, Int)].collect().toSet
+    }
     assert(rcF == rcD, s"resume-converged diverged")
     // personalized: seeds include a non-graph ghost (ignored by both)
     val seeds = Seq("hub", "a", "ghost").toDF("node")
     assert(m(Graph.personalizedPageRankScaled(
         edges, "src", "dst", seeds, 5)) ==
-      m(Graph.personalizedPageRankScaled(
-        edges, "src", "dst", seeds, 5, smallCutoff = 0L)))
+      withConf(stagedOnly)(m(Graph.personalizedPageRankScaled(
+        edges, "src", "dst", seeds, 5))))
     // weighted: unique pairs, mixed weights
     val we = Seq(("a", "b", 3L), ("b", "c", 1L), ("c", "a", 2L),
       ("hub", "a", 5L), ("hub", "sink", 1L), ("p", "q", 4L))
       .toDF("src", "dst", "w")
     assert(m(Graph.pageRankScaledWeighted(we, "src", "dst", "w", 4)) ==
-      m(Graph.pageRankScaledWeighted(we, "src", "dst", "w", 4,
-        smallCutoff = 0L)))
+      withConf(stagedOnly)(
+        m(Graph.pageRankScaledWeighted(we, "src", "dst", "w", 4))))
     // HITS: both scores
     def mh(df: org.apache.spark.sql.DataFrame) =
       df.as[(String, Long, Long)].collect().toSet
     assert(mh(Graph.hitsScaled(edges, "src", "dst", 3)) ==
-      mh(Graph.hitsScaled(edges, "src", "dst", 3, smallCutoff = 0L)))
+      withConf(stagedOnly)(mh(Graph.hitsScaled(edges, "src", "dst", 3))))
     // unseeded label propagation
     assert(m(Graph.labelPropagationCommunities(edges, "src", "dst", 4))
-      == m(Graph.labelPropagationCommunities(edges, "src", "dst", 4,
-        smallCutoff = 0L)))
+      == withConf(stagedOnly)(
+        m(Graph.labelPropagationCommunities(edges, "src", "dst", 4))))
     // seeded label propagation: seed only one component so the other
     // stays null-labeled on both paths
     val slSeeds = Seq(("p", 1L)).toDF("node", "label")
@@ -667,8 +679,8 @@ class GraphSpec extends AnyFunSuite {
       df.as[(String, Option[Long])].collect().toMap
     val slF = ms(Graph.seededLabelPropagation(
       edges, "src", "dst", slSeeds, 2))
-    val slD = ms(Graph.seededLabelPropagation(
-      edges, "src", "dst", slSeeds, 2, smallCutoff = 0L))
+    val slD = withConf(stagedOnly)(ms(Graph.seededLabelPropagation(
+      edges, "src", "dst", slSeeds, 2)))
     assert(slF == slD, s"seeded LP diverged: $slF vs $slD")
     assert(slF("q") == Some(1L) && slF("hub").isEmpty,
       s"seed component labeled, far component null: $slF")
@@ -677,10 +689,47 @@ class GraphSpec extends AnyFunSuite {
     def mb(df: org.apache.spark.sql.DataFrame) =
       df.as[(String, String)].collect().toMap
     assert(mb(Graph.bowTie(edges, "src", "dst")) ==
-      mb(Graph.bowTie(edges, "src", "dst", smallCutoff = 0L)))
+      withConf(stagedOnly)(mb(Graph.bowTie(edges, "src", "dst"))))
     assert(mb(Graph.bowTie(edges, "src", "dst", maxRounds = 1)) ==
-      mb(Graph.bowTie(edges, "src", "dst", maxRounds = 1,
-        smallCutoff = 0L)))
+      withConf(stagedOnly)(
+        mb(Graph.bowTie(edges, "src", "dst", maxRounds = 1))))
+  }
+
+  test("spark.graft.driverPath.maxRows = 0 moves the registered " +
+       "link_pagerank onto its staged loop with identical rows") {
+    val query = SparkEntry.queries("link_pagerank")
+    val iterations = 5 // the query's pageRankScaled iteration count
+    // result rows plus the staged writes the run made: the staged loop
+    // writes one rank table per iteration, the driver replica none
+    def run(): (Seq[org.apache.spark.sql.Row], Long) =
+      graft.core.Tables.stagedScope {
+        val s0 = graft.core.Tables.stagedWriteCount
+        val rows = query(spark, "/root/testdata/sf0.001").collect().toSeq
+        (rows, graft.core.Tables.stagedWriteCount - s0)
+      }
+    val (driverRows, driverWrites) = run()
+    val (stagedRows, stagedWrites) = withConf(stagedOnly)(run())
+    assert(driverRows.nonEmpty && stagedRows == driverRows)
+    assert(driverWrites < iterations,
+      s"default limit: expected the driver replica, saw $driverWrites " +
+        "staged writes")
+    assert(stagedWrites >= iterations,
+      s"maxRows = 0: expected the staged loop, saw $stagedWrites " +
+        "staged writes")
+  }
+
+  test("spark.graft.driverPath.maxRows rejects a value that is not a " +
+       "non-negative long, naming the key") {
+    val edges = Seq(("a", "b"), ("b", "a")).toDF("src", "dst")
+    Seq("-1", "ten").foreach { bad =>
+      val e = intercept[IllegalArgumentException] {
+        withConf("spark.graft.driverPath.maxRows" -> bad) {
+          Graph.pageRankScaled(edges, "src", "dst", 1)
+        }
+      }
+      assert(e.getMessage.contains("spark.graft.driverPath.maxRows") &&
+        e.getMessage.contains(bad), e.getMessage)
+    }
   }
 
   test("extractLinks: attribute order, uppercase tags, and the " +

@@ -8,6 +8,7 @@ import graft.llm.{Dedup, Multimodal, Robots, Similarity, TextAnalysis}
 class LlmSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
+  import TestSpark.{stagedOnly, withConf}
 
   private val docs = Seq(
     (1L, "the quick brown fox jumps over the lazy dog near the river"),
@@ -133,12 +134,14 @@ class LlmSpec extends AnyFunSuite {
     // diameter 400 — plain neighbor-min propagation would need ~400
     // rounds and blow the 40-round budget; pointer jumping needs ~9.
     // Descending ids so labels must travel the full chain length.
-    // smallCutoff = 0 forces the DISTRIBUTED loop (the r17 default
+    // maxRows = 0 forces the DISTRIBUTED loop (the r17 default
     // routes graphs this small through the driver-side union-find).
     val pairs = (1L to 400L).map(i => (1000L - i, 1001L - i))
       .toDF("id1", "id2")
-    val comps = Dedup.connectedComponents(pairs, smallCutoff = 0L)
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    val comps = withConf(stagedOnly) {
+      Dedup.connectedComponents(pairs)
+        .collect().map(r => (r.getLong(0), r.getLong(1)))
+    }
     assert(comps.length == 401)
     assert(comps.forall(_._2 == 600L))
     // the r17 driver-side union-find (default cutoff) must agree
@@ -152,8 +155,10 @@ class LlmSpec extends AnyFunSuite {
       .toDF("id1", "id2")
     val sFast = Dedup.connectedComponents(spairs)
       .as[(String, String)].collect().toMap
-    val sDist = Dedup.connectedComponents(spairs, smallCutoff = 0L)
-      .as[(String, String)].collect().toMap
+    val sDist = withConf(stagedOnly) {
+      Dedup.connectedComponents(spairs)
+        .as[(String, String)].collect().toMap
+    }
     assert(sFast == sDist, s"string fast path diverged: $sFast vs $sDist")
     assert(sFast("a") == "Z" && sFast("x") == "x")
   }
@@ -164,7 +169,7 @@ class LlmSpec extends AnyFunSuite {
     // propagation+jump round moves every u ≥ 2 to u−2 — 48 changes
     val pairs = (0L until 49L).map(i => (i, i + 1)).toDF("id1", "id2")
     val e = intercept[IllegalStateException] {
-      Dedup.connectedComponents(pairs, maxIters = 1, smallCutoff = 0L)
+      withConf(stagedOnly)(Dedup.connectedComponents(pairs, maxIters = 1))
     }
     assert(e.getMessage.contains("48 labels still changing"),
       e.getMessage)

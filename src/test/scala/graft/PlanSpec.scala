@@ -246,9 +246,7 @@ class PlanSpec extends AnyFunSuite {
   test("bucketed tables co-locate the merge join: zero exchanges") {
     import spark.implicits._
     // disable auto-broadcast so the join must co-locate or shuffle
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    TestSpark.withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val stg = (1 to 1000).map(i => (i.toLong, s"s$i"))
         .toDF("k", "v_stg")
       val ods = (500 to 1500).map(i => (i.toLong, s"o$i"))
@@ -260,8 +258,6 @@ class PlanSpec extends AnyFunSuite {
       val p = joined.queryExecution.executedPlan.toString
       assert(!p.contains("Exchange"), p.take(800))
       assert(joined.count() == 501)
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     }
   }
 }

@@ -71,7 +71,6 @@ class QuantKernelSpec extends AnyFunSuite {
 
   test("interpreted eval path matches codegen (factoryMode toggle)") {
     val key = "spark.sql.codegen.factoryMode"
-    val prev = spark.conf.getOption(key)
     val cents = Seq(Seq(1.0, 0.0), Seq(0.0, -1.0), Seq(1.0, 1.0))
     def run(): Seq[Seq[String]] =
       canon(native(edgeVecs).orderBy("vec_id").collect().toSeq) ++
@@ -81,18 +80,9 @@ class QuantKernelSpec extends AnyFunSuite {
           Similarity.l2NormalizeStaged(col("v"), col("nrm")).as("u"),
           Similarity.cellsFor(col("v"), cents, 2).as("c"))
         .orderBy("vec_id").collect().toSeq)
-    try {
-      spark.conf.set(key, "CODEGEN_ONLY")
-      val gen = run()
-      spark.conf.set(key, "NO_CODEGEN")
-      val interp = run()
-      assert(gen == interp)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
+    val gen = TestSpark.withConf(key -> "CODEGEN_ONLY")(run())
+    val interp = TestSpark.withConf(key -> "NO_CODEGEN")(run())
+    assert(gen == interp)
   }
 
   test("l2NormalizeStaged: native == HOF on the adversarial vectors") {

@@ -61,18 +61,18 @@ class TablesSpec extends AnyFunSuite {
   }
 
   test("stagedWithStringRange does not trust truncated footer stats") {
-    val key = "parquet.statistics.truncate.length"
-    spark.conf.set(key, "4")
-    try Tables.stagedScope {
-      import spark.implicits._
-      val df = Seq("abcdefgh", "zyxwvuts", "mmmmmmmmmm").toDF("s")
-      assert(Tables.stagedWithStringRange(df, "ts_srange_trunc", "s")._2
-        .isEmpty)
-      // 3-byte code points: the cut lands on a boundary below the limit
-      val cjk = Seq("\u4E2D\u6587\u4E2D\u6587").toDF("s")
-      assert(Tables.stagedWithStringRange(cjk, "ts_srange_trunc", "s")._2
-        .isEmpty)
-    } finally spark.conf.unset(key)
+    TestSpark.withConf("parquet.statistics.truncate.length" -> "4") {
+      Tables.stagedScope {
+        import spark.implicits._
+        val df = Seq("abcdefgh", "zyxwvuts", "mmmmmmmmmm").toDF("s")
+        assert(Tables.stagedWithStringRange(df, "ts_srange_trunc", "s")._2
+          .isEmpty)
+        // 3-byte code points: the cut lands on a boundary below the limit
+        val cjk = Seq("\u4E2D\u6587\u4E2D\u6587").toDF("s")
+        assert(Tables.stagedWithStringRange(cjk, "ts_srange_trunc", "s")._2
+          .isEmpty)
+      }
+    }
   }
 
   test("stagedWithLongMax equals agg(max) on int and long columns") {

@@ -19,6 +19,22 @@ object TestSpark {
     s
   }
 
+  /** Run `body` with the given session conf keys set on [[spark]], then
+    * put each key back: its previous value, or unset when it had none. */
+  def withConf[T](kv: (String, String)*)(body: => T): T = {
+    val prev = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** [[withConf]] setting that turns every driver-side replica off, so
+    * the size-gated graph/apportion operators take their staged loops. */
+  val stagedOnly: (String, String) = "spark.graft.driverPath.maxRows" -> "0"
+
   /** Scratch dir for a test, under the relocatable [[graft.core.Tables.tmpDir]]
     * (never a hardcoded checkout path — honors the GRAFT_TMP_DIR
     * override the production code documents). */

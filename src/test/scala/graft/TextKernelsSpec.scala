@@ -349,7 +349,6 @@ class TextKernelsSpec extends AnyFunSuite {
     // the kernels ship BOTH nullSafeEval and doGenCode; normal runs
     // exercise only the generated path, so pin the interpreted one too
     val key = "spark.sql.codegen.factoryMode"
-    val prev = spark.conf.getOption(key)
     def run(): Seq[Seq[org.apache.spark.sql.Row]] = Seq(
       TextAnalysis.gopherRules(edgeDocs, "doc_id", "text"),
       TextAnalysis.c4Signals(edgeDocs, "doc_id", "text"),
@@ -359,18 +358,9 @@ class TextKernelsSpec extends AnyFunSuite {
         TextAnalysis.wordShingles(col("text")).as("sh")),
       sentenceQuadNative(edgeDocs))
       .map(_.orderBy("doc_id").collect().toSeq)
-    try {
-      spark.conf.set(key, "CODEGEN_ONLY")
-      val gen = run()
-      spark.conf.set(key, "NO_CODEGEN")
-      val interp = run()
-      assert(gen == interp)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
+    val gen = TestSpark.withConf(key -> "CODEGEN_ONLY")(run())
+    val interp = TestSpark.withConf(key -> "NO_CODEGEN")(run())
+    assert(gen == interp)
   }
 
   // ---- semantic-trap pins: if Spark/Java behavior ever shifts, these

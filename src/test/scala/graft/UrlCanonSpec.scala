@@ -134,10 +134,7 @@ class UrlCanonSpec extends AnyFunSuite {
 
   test("non-ANSI mode: unparseable url yields the null-parts row " +
        "(path '/', kept_query '') in BOTH forms") {
-    val key = "spark.sql.ansi.enabled"
-    val prev = spark.conf.get(key)
-    try {
-      spark.conf.set(key, "false")
+    TestSpark.withConf("spark.sql.ansi.enabled" -> "false") {
       // both forms must be CONSTRUCTED under ansi=false — parse_url
       // and UrlCanonParts bake failOnError at Column build time
       val df = Seq((1L, "not a url"), (2L, "http://exa mple.com/p"),
@@ -149,17 +146,14 @@ class UrlCanonSpec extends AnyFunSuite {
       // not a null struct
       assert(nu.head.getString(4) == "/" && nu.head.getString(5) == "" &&
         nu.head.isNullAt(7), s"null-parts row: ${nu.head}")
-    } finally spark.conf.set(key, prev)
+    }
   }
 
   test("non-ANSI junk fuzz: native == composed on 300 arbitrary " +
        "strings (valid, malformed, empty, unicode)") {
     import org.scalacheck.Gen
     import org.scalacheck.rng.Seed
-    val key = "spark.sql.ansi.enabled"
-    val prev = spark.conf.get(key)
-    try {
-      spark.conf.set(key, "false")
+    TestSpark.withConf("spark.sql.ansi.enabled" -> "false") {
       val pieceGen: Gen[String] = Gen.frequency(
         6 -> Gen.choose(32, 126).map(_.toChar.toString),
         2 -> Gen.oneOf("://", "http", "www.", "?", "&", "=", "#", ":",
@@ -174,25 +168,15 @@ class UrlCanonSpec extends AnyFunSuite {
       }.toDF("doc_id", "url")
       val (nu, hof) = bothForms(rows)
       nu.zip(hof).foreach { case (a, b) => assert(a == b, s"\n$a\n$b") }
-    } finally spark.conf.set(key, prev)
+    }
   }
 
   test("interpreted eval path matches codegen (factoryMode toggle)") {
     val key = "spark.sql.codegen.factoryMode"
-    val prev = spark.conf.getOption(key)
     def run(): Seq[org.apache.spark.sql.Row] = bothForms(edgeUrls)._1
-    try {
-      spark.conf.set(key, "CODEGEN_ONLY")
-      val gen = run()
-      spark.conf.set(key, "NO_CODEGEN")
-      val interp = run()
-      assert(gen == interp)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
+    val gen = TestSpark.withConf(key -> "CODEGEN_ONLY")(run())
+    val interp = TestSpark.withConf(key -> "NO_CODEGEN")(run())
+    assert(gen == interp)
   }
 
   test("one-parse plan: a multi-field projection carries no " +

@@ -63,6 +63,7 @@ object Bench {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.extensions", "graft.sql.GraftExtensions")
       // UTC is the correctness precondition Tables.events' NTZ cast
       // documents — without it the events bench queries would time a
       // DIFFERENT workload (zone-shifted timestamps) than Verify gates
@@ -110,6 +111,13 @@ object Bench {
     // shuffled RDD — the structural markers of the
     // many-small-disk-jobs class
     var lastStaged = 0L
+    // generated classes Spark compiled during the pass (a miss in the
+    // JVM-wide codegen cache, 12–19 ms each): a warm pass that still
+    // compiles most of its classes means the cache is too small for the
+    // working set (see GraftExtensions), not a plan change
+    def compilesNow(): Long = org.apache.spark.metrics.source.CodegenMetrics
+      .METRIC_COMPILATION_TIME.getCount
+    var lastCompiles = 0L
     val phaseTs = scala.collection.mutable.LinkedHashMap[String, Double]()
     phaseTs("run_start") = epochS()
     def timeInto(sink: scala.collection.mutable.LinkedHashMap[String, String])
@@ -118,6 +126,7 @@ object Bench {
       lastPassTs = epochS()
       val s0 = graft.core.Tables.stagedWriteCount
       val p0 = graft.ops.Relational.twoPhaseRunCount
+      val c0 = compilesNow()
       val t0 = System.nanoTime()
       val g0 = gcMsNow()
       val ok =
@@ -132,6 +141,7 @@ object Bench {
       lastGcMs = gcMsNow() - g0
       lastStaged = (graft.core.Tables.stagedWriteCount - s0) +
         2L * (graft.ops.Relational.twoPhaseRunCount - p0)
+      lastCompiles = compilesNow() - c0
       // drop cached tables the query persisted so runs stay independent
       // (accumulated cache + block-manager state was measured to slow
       // unrelated queries later in the pass); also reap the staging
@@ -240,11 +250,15 @@ object Bench {
     val sorted = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
     // a SINGLE warm pass is not a trustworthy per-query signal: the
-    // round-4 artifact had six queries reporting warm > cold (GC /
-    // codegen-cache interference), poisoning round-over-round
-    // comparison. Median of ≥3 back-to-back passes per query is robust
-    // to one outlier pass; all passes land in the artifact so the
-    // spread itself is inspectable.
+    // round-4 artifact had six queries reporting warm > cold (GC, and
+    // recompiled generated code: at Spark's default 100-entry codegen
+    // cache a query needing more classes than that evicts its own and
+    // recompiles them on every pass; the session now installs
+    // GraftExtensions, which sizes the cache at 1000, and
+    // queries_warm_compiles / queries_cold_compiles record the misses),
+    // poisoning round-over-round comparison. Median of ≥3 back-to-back
+    // passes per query is robust to one outlier pass; all passes land in
+    // the artifact so the spread itself is inspectable.
     //
     // Parsed + validated BEFORE the cold pass runs: discovering a bad
     // pass count after ~2.5 min of cold timings would discard them all.
@@ -286,12 +300,14 @@ object Bench {
     phaseTs("canary_start") = epochS()
     val canaryStart = canaryRun("start")
     val coldGc = scala.collection.mutable.LinkedHashMap[String, Long]()
+    val coldCompiles = scala.collection.mutable.LinkedHashMap[String, Long]()
     val coldTs = scala.collection.mutable.LinkedHashMap[String, Double]()
     phaseTs("cold") = epochS()
     val cold = sorted.flatMap { case (name, fn) =>
       time(name, fn).map { dt =>
         System.err.println(f"[bench] cold $name%-28s $dt%8.2f s")
         coldGc(name) = lastGcMs
+        coldCompiles(name) = lastCompiles
         coldTs(name) = lastPassTs
         coldStaged(name) = lastStaged
         name -> dt
@@ -310,6 +326,8 @@ object Bench {
       scala.collection.mutable.LinkedHashMap[String, List[Long]]()
     val warmTsRuns =
       scala.collection.mutable.LinkedHashMap[String, List[Double]]()
+    val warmCompileRuns =
+      scala.collection.mutable.LinkedHashMap[String, List[Long]]()
     phaseTs("warm") = epochS()
     val warmRuns = sorted
       .filter { case (name, _) => !failed.contains(name) }
@@ -322,6 +340,8 @@ object Bench {
               warmGcRuns.getOrElse(name, Nil) :+ lastGcMs
             warmTsRuns(name) =
               warmTsRuns.getOrElse(name, Nil) :+ lastPassTs
+            warmCompileRuns(name) =
+              warmCompileRuns.getOrElse(name, Nil) :+ lastCompiles
             dt
           }
         }
@@ -514,6 +534,13 @@ object Bench {
         n -> math.round(medianOf(gs.map(_.toDouble))) }
     val coldGcJson = jsL(coldGc.toSeq
       .filter { case (n, _) => !failed.contains(n) })
+    // same shape for generated-class compilations per pass
+    val warmCompilesMed = warmCompileRuns.toSeq
+      .filter { case (n, _) => warmNames(n) }
+      .map { case (n, cs) =>
+        n -> math.round(medianOf(cs.map(_.toDouble))) }
+    val coldCompilesJson = jsL(coldCompiles.toSeq
+      .filter { case (n, _) => !failed.contains(n) })
     // "cold_canary_prewarmed": the start canary runs its six queries
     // 6× each BEFORE the cold loop, so those queries' cold timings are
     // systematically warmer than pre-r12 artifacts' — the flag makes
@@ -529,7 +556,7 @@ object Bench {
       .mkString("{", ",", "}")
     val noisyDerivedJson = jsL(coldStaged.toSeq
       .filter { case (_, c) => c >= noisyStagedMin })
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":${js(coldOk)},"queries_warm":${js(warm)},"queries_warm_min":${js(warmMin)},"warm_passes":${jsArr(warmRuns)},"warm_pass_count":$warmPasses,"warm_spread":${js(warmSpread)},"failed":$failedJson,"canary_failed":$canaryFailedJson,"cold_canary_prewarmed":${canaryEnabled},"total_warm":$totalWarm,"host_factor":$hfJson,"canary_start":${js(canaryStart)},"canary_mid":${js(canaryMid)},"canary_end":${js(canaryEnd)},"canary_pinned":${js(canaryPinned)},"io_factor":$iofJson,"io_canary_start":${ioStart.mkString("[", ",", "]")},"io_canary_mid":${ioMid.mkString("[", ",", "]")},"io_canary_end":${ioEnd.mkString("[", ",", "]")},"io_canary_pinned":$ioCanaryPinned,"io_share":$ioShare,"io_bound_queries":$ioBoundJson,"total_warm_normalized":$totalWarmNormJson,"total_warm_normalized_dual":$totalWarmDualJson,"queries_warm_normalized":${js(warmNormalized)},"queries_warm_normalized_dual":${js(warmDual)},"queries_warm_gc_ms":${jsL(warmGcMed)},"queries_cold_gc_ms":$coldGcJson,"phase_ts":${js(phaseTs.toSeq)},"queries_cold_ts":${js(coldTs.toSeq)},"warm_pass_ts":${jsArr(warmTsRuns.toSeq)},"queries_isolated":${js(isolated)},"isolated_trigger":$isolatedTriggerJson,"isolated_failed":$isolatedFailedJson,"noisy_derived":$noisyDerivedJson,"noisy_rule":"staged_writes+2*two_phase>=${noisyStagedMin}|streaming_*","sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":${js(coldOk)},"queries_warm":${js(warm)},"queries_warm_min":${js(warmMin)},"warm_passes":${jsArr(warmRuns)},"warm_pass_count":$warmPasses,"warm_spread":${js(warmSpread)},"failed":$failedJson,"canary_failed":$canaryFailedJson,"cold_canary_prewarmed":${canaryEnabled},"total_warm":$totalWarm,"host_factor":$hfJson,"canary_start":${js(canaryStart)},"canary_mid":${js(canaryMid)},"canary_end":${js(canaryEnd)},"canary_pinned":${js(canaryPinned)},"io_factor":$iofJson,"io_canary_start":${ioStart.mkString("[", ",", "]")},"io_canary_mid":${ioMid.mkString("[", ",", "]")},"io_canary_end":${ioEnd.mkString("[", ",", "]")},"io_canary_pinned":$ioCanaryPinned,"io_share":$ioShare,"io_bound_queries":$ioBoundJson,"total_warm_normalized":$totalWarmNormJson,"total_warm_normalized_dual":$totalWarmDualJson,"queries_warm_normalized":${js(warmNormalized)},"queries_warm_normalized_dual":${js(warmDual)},"queries_warm_gc_ms":${jsL(warmGcMed)},"queries_cold_gc_ms":$coldGcJson,"queries_warm_compiles":${jsL(warmCompilesMed)},"queries_cold_compiles":$coldCompilesJson,"phase_ts":${js(phaseTs.toSeq)},"queries_cold_ts":${js(coldTs.toSeq)},"warm_pass_ts":${jsArr(warmTsRuns.toSeq)},"queries_isolated":${js(isolated)},"isolated_trigger":$isolatedTriggerJson,"isolated_failed":$isolatedFailedJson,"noisy_derived":$noisyDerivedJson,"noisy_rule":"staged_writes+2*two_phase>=${noisyStagedMin}|streaming_*","sf":"$sfDir"}"""
     if (failed.nonEmpty)
       System.err.println(
         s"[bench] ${failed.size} queries FAILED (excluded from timings): " +

@@ -27,6 +27,7 @@ object Profile {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.extensions", "graft.sql.GraftExtensions")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

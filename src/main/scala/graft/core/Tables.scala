@@ -317,7 +317,12 @@ object Tables {
     * crashed append, .staging, _SUCCESS-style markers) are skipped
     * exactly like Spark's reader — otherwise a crash mid-append would
     * leak uncommitted task files the read side never sees into every
-    * footer-derived figure. */
+    * footer-derived figure.
+    *
+    * The walk uses `listStatus`, not `listFiles`: each `LocatedFileStatus`
+    * the latter builds loads its file's permission, which the local FS
+    * without native Hadoop gets by forking `ls -ld` per file (~750 ms
+    * against ~6 ms over 250 files). */
   private def footerBlocks(path: String,
       conf: org.apache.hadoop.conf.Configuration):
       Seq[org.apache.parquet.hadoop.metadata.BlockMetaData] = {
@@ -328,20 +333,18 @@ object Tables {
     def visible(f: org.apache.hadoop.fs.Path): Boolean =
       f.toUri.getPath.split("/").drop(baseDepth)
         .forall(seg => !seg.startsWith("_") && !seg.startsWith("."))
-    val blocks =
-      Seq.newBuilder[org.apache.parquet.hadoop.metadata.BlockMetaData]
-    val it = fs.listFiles(p, true)
-    while (it.hasNext) {
-      val f = it.next()
-      if (f.isFile && visible(f.getPath)) {
-        val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile
-            .fromStatus(f, conf))
-        try blocks ++= rd.getFooter.getBlocks.asScala
-        finally rd.close()
+    // a hidden directory hides everything below it, so it is not entered
+    def walk(dir: org.apache.hadoop.fs.Path)
+        : Seq[org.apache.hadoop.fs.FileStatus] =
+      fs.listStatus(dir).toSeq.filter(f => visible(f.getPath)).flatMap {
+        f => if (f.isDirectory) walk(f.getPath) else Seq(f)
       }
+    walk(p).flatMap { f =>
+      val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf))
+      try rd.getFooter.getBlocks.asScala.toSeq
+      finally rd.close()
     }
-    blocks.result()
   }
 
   /** Register an arbitrary directory with the staged-path reaper —

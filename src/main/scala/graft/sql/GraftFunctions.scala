@@ -165,10 +165,41 @@ object GraftFunctions {
   * {{{
   * SparkSession.builder()
   *   .config("spark.sql.extensions", "graft.sql.GraftExtensions")
-  * }}} */
+  * }}}
+  *
+  * Besides the functions, the extension raises the default of Spark's
+  * own static `spark.sql.codegen.cache.maxEntries` from 100 to
+  * [[GraftExtensions.CodegenCacheEntries]]. Spark keeps compiled
+  * generated classes in one JVM-wide LRU cache of that many entries. A
+  * graft pipeline run as a repeated operation in one long-lived session
+  * (an ODS load + trgx + report window, or the corpus build) touches
+  * about 150–170 distinct classes per process, so at 100 every operation
+  * evicts the classes the next one needs and a warm operation
+  * recompiled ~120 of them (12–19 ms each); at 1000 a warm operation
+  * compiles almost none. An explicit value (builder `.config`, `--conf`,
+  * `-Dspark.sql.codegen.cache.maxEntries`) always wins.
+  *
+  * The default reaches the cache because extensions are applied after
+  * the SparkContext exists but before the session state copies the
+  * context's conf, and `CodeGenerator` sizes its cache once, at the
+  * JVM's first code generation. The cache is JVM-wide: if a session
+  * without this extension generated code first, the cache is already
+  * sized and this default changes nothing — install the extension on
+  * the first session, or set the conf. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftFunctions.descriptions.foreach(ext.injectFunction)
     GraftFunctions.tableDescriptions.foreach(ext.injectTableFunction)
+    GraftBridge.contextConfDefault(GraftExtensions.CodegenCacheKey,
+      GraftExtensions.CodegenCacheEntries.toString)
   }
+}
+
+object GraftExtensions {
+  /** Spark's static conf that sizes the JVM-wide generated-class cache. */
+  val CodegenCacheKey = "spark.sql.codegen.cache.maxEntries"
+  /** Default the extension gives [[CodegenCacheKey]]: room for the
+    * ~150–170-class working set of a pipeline process several times
+    * over. */
+  val CodegenCacheEntries = 1000
 }

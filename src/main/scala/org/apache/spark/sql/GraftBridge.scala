@@ -56,6 +56,18 @@ object GraftBridge {
       case _ => df
     }
 
+  /** Give `key` the default `value` on a live SparkConf unless the user
+    * already set it (builder `.config`, `--conf`, a `-Dspark.*` property
+    * or spark-defaults all land there first, so an explicit value always
+    * wins). The conf defaults to the active SparkContext's own — the one
+    * `SparkContext.conf` (private[spark]) exposes and a new session's
+    * state copies its static SQL confs from; `getConf` would only hand
+    * back a copy. A no-op when no SparkContext is running. */
+  def contextConfDefault(key: String, value: String,
+      conf: Option[org.apache.spark.SparkConf] =
+        org.apache.spark.SparkContext.getActive.map(_.conf)): Unit =
+    conf.foreach(_.setIfMissing(key, value))
+
   /** Table-function twin of [[registerFunction]]. */
   def registerTableFunction(
       spark: SparkSession,

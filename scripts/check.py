@@ -90,7 +90,7 @@ if "--selftest" in sys.argv:
     selftest()
 
 sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-out_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/repo/target/verify_out"
+out_dir = sys.argv[2] if len(sys.argv) > 2 else "target/verify_out"
 
 con = duckdb.connect()
 for tbl in ["region","nation","customer","supplier","part","orders",

@@ -14,12 +14,21 @@ host charges both sides alike. Each checkout builds its own classes
 under its own `perfbench/.work/`.
 
 Prints one line per run, then per-metric medians, the change's delta
-against the base, the base's spread (interquartile range over median)
-and the number of seeds on which the change was better. The same
-figures, with every run's metrics, go to `--out` as JSON. Metric names,
-units and better-directions come from BENCHMARK.json; nothing under
-perfbench/ is modified.
+against the base, the base's spread (interquartile range over median),
+the number of seeds on which the change was better and a verdict:
+
+- `gain`: the change was better on at least 90% of the pairs AND its
+  median beats the base median by more than the base's interquartile
+  range (the gap over IQR column is above 1);
+- `regression`: the change's median is worse than the base median by
+  more than the metric's BENCHMARK.json bound;
+- `flat`: neither.
+
+The same figures, with every run's metrics, go to `--out` as JSON.
+Metric names, units, bounds and better-directions come from
+BENCHMARK.json; nothing under perfbench/ is modified.
 """
+import math
 import argparse
 import json
 import os
@@ -92,6 +101,8 @@ def summarize(runs, metrics):
         cmed = statistics.median(change)
         better = sum((c < b) if lower else (c > b)
                      for b, c in zip(base, change))
+        # the change's median improvement, positive when it is better
+        gain = (med - cmed) if lower else (cmed - med)
         summary[name] = {
             "unit": m["unit"], "better": m["better"], "bound": m["bound"],
             "base": base, "change": change,
@@ -99,8 +110,20 @@ def summarize(runs, metrics):
             "delta": (cmed - med) / med if med else None,
             "base_iqr_over_median": (q3 - q1) / med if med else None,
             "pairs_better": better,
+            "gap_over_base_iqr": gain / (q3 - q1) if q3 > q1 else None,
+            "verdict": verdict(gain, q3 - q1, med, better, len(seeds),
+                               m["bound"]),
         }
     return seeds, summary
+
+
+def verdict(gain, iqr, base_median, pairs_better, pairs, bound):
+    """`gain`, `regression` or `flat` (see the module docstring)."""
+    if pairs_better >= math.ceil(0.9 * pairs) and gain > iqr:
+        return "gain"
+    if base_median and -gain / abs(base_median) > bound:
+        return "regression"
+    return "flat"
 
 
 def main(argv=None):
@@ -149,14 +172,17 @@ def main(argv=None):
           f"({head_sha[:12]}{' + edits' if dirty else ''}), "
           f"{len(seeds)} seeds, --seconds {seconds:g}")
     print(f"  {'metric':20s} {'base':>10s} {'change':>10s} {'delta':>8s} "
-          f"{'base IQR/med':>13s} {'better':>7s}")
+          f"{'base IQR/med':>13s} {'better':>7s} {'gap/IQR':>8s}  verdict")
     for name, s in summary.items():
         delta = "n/a" if s["delta"] is None else f"{100 * s['delta']:+.1f}%"
         spread = ("n/a" if s["base_iqr_over_median"] is None
                   else f"{s['base_iqr_over_median']:.3f}")
+        gap = ("n/a" if s["gap_over_base_iqr"] is None
+               else f"{s['gap_over_base_iqr']:+.2f}")
         print(f"  {name:20s} {s['base_median']:10.3f} "
               f"{s['change_median']:10.3f} {delta:>8s} {spread:>13s} "
-              f"{s['pairs_better']:>3d}/{len(seeds)}")
+              f"{s['pairs_better']:>3d}/{len(seeds)} {gap:>8s}  "
+              f"{s['verdict']}")
     out = args.out or f"ab_{args.workload}.json"
     with open(out, "w") as fh:
         json.dump({

@@ -564,12 +564,13 @@ object Bench {
     println(line)
     // the driver preserves only a short stdout tail (round 3 lost the
     // per-query cold map to truncation) — mirror the full JSON into the
-    // repo so rounds stay diffable. A SPARK_GRAFT_ONLY-filtered run
-    // goes to a sibling file: a 3-query iteration must never clobber
-    // the full-suite artifact (it silently did once).
+    // working directory (the checkout, under sbt) so rounds stay
+    // diffable. A SPARK_GRAFT_ONLY-filtered run goes to a sibling file:
+    // a 3-query iteration must never clobber the full-suite artifact (it
+    // silently did once).
     val outDefault =
-      if (sys.env.contains("SPARK_GRAFT_ONLY")) "/root/repo/BENCH_PARTIAL.json"
-      else "/root/repo/BENCH_LOCAL.json"
+      if (sys.env.contains("SPARK_GRAFT_ONLY")) "BENCH_PARTIAL.json"
+      else "BENCH_LOCAL.json"
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(
       sys.env.getOrElse("GRAFT_BENCH_OUT", outDefault)),
       line + "\n")

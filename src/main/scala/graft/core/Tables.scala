@@ -2,7 +2,7 @@ package graft.core
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 
 /** Parquet table catalog over the driver's TESTDATA layout.
   *
@@ -32,10 +32,43 @@ object Tables {
     Option(tableSchemas.get(path)).filter(_._1 == mtime) match {
       case Some((_, sc)) => spark.read.schema(sc).parquet(path)
       case None =>
-        val df = spark.read.parquet(path)
-        tableSchemas.put(path, (mtime, df.schema))
-        df
+        val sc = parquetSchema(spark, path)
+        tableSchemas.put(path, (mtime, sc))
+        spark.read.schema(sc).parquet(path)
     }
+  }
+
+  /** The schema `spark.read.parquet(path).schema` infers, read on the
+    * driver: every footer of a flat parquet file or directory goes
+    * through Spark's own footer converter under the session conf
+    * ([[GraftBridge.parquetFooterSchema]]), made nullable like a file
+    * relation's schema. Spark's inference is a job that reads one
+    * footer and trusts it for the rest, so this helper requires every
+    * footer to agree; on any disagreement, and for layouts Spark would
+    * read differently (partition or other subdirectories, summary
+    * `_metadata` files, no data file at all), it runs Spark's
+    * inference instead. */
+  def parquetSchema(spark: SparkSession, path: String):
+      org.apache.spark.sql.types.StructType = {
+    val conf = spark.sessionState.newHadoopConf()
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(conf)
+    val top =
+      if (!fs.exists(p)) Nil
+      else {
+        val root = fs.getFileStatus(p)
+        if (root.isDirectory) fs.listStatus(p).toSeq else Seq(root)
+      }
+    val summaries = top.exists(f =>
+      Set("_metadata", "_common_metadata")(f.getPath.getName))
+    val data = top.filter(f => visibleName(f.getPath.getName))
+    val schemas =
+      if (summaries || data.exists(_.isDirectory)) Nil
+      else data.map(f => GraftBridge.parquetFooterSchema(spark,
+        new org.apache.parquet.hadoop.Footer(f.getPath, footer(f, conf))))
+    if (schemas.nonEmpty && schemas.forall(_ == schemas.head))
+      GraftBridge.asNullable(schemas.head)
+    else spark.read.parquet(path).schema
   }
 
   /** Read one named table from a scale-factor directory. */
@@ -75,10 +108,11 @@ object Tables {
   }
 
   /** Scratch directory for queries that materialize intermediate
-    * tables (staged parquet, embedded Derby). Overridable so checkouts
-    * not rooted at /root/repo still run. */
-  def tmpDir: String =
-    sys.env.getOrElse("GRAFT_TMP_DIR", "/root/repo/target/graft_tmp")
+    * tables (staged parquet, embedded Derby): `GRAFT_TMP_DIR`, else
+    * `target/graft_tmp` under the working directory, made absolute so
+    * every consumer (Spark, java.nio, Derby) sees the same directory. */
+  def tmpDir: String = sys.env.getOrElse("GRAFT_TMP_DIR",
+    java.nio.file.Paths.get("target", "graft_tmp").toAbsolutePath.toString)
 
   // ---------- owned staging boundaries ----------
 
@@ -213,6 +247,30 @@ object Tables {
     * [[stagedWithStringRange]] for the exactness argument. */
   def parquetStringMinMax(path: String,
       conf: org.apache.hadoop.conf.Configuration,
+      colName: String): Option[(String, String)] =
+    stringMinMax(footerBlocks(path, conf), conf, colName)
+
+  /** Footer-statistics (min, max, row count) of a top-level string
+    * column over exactly the parquet files `files` (paths or URIs, e.g.
+    * a file relation's `inputFiles`) — the load-range bookkeeping's
+    * zero-job answer. None under the same conditions as
+    * [[parquetStringMinMax]], including when no row holds a non-null
+    * value. */
+  def parquetFilesStringRange(files: Seq[String],
+      conf: org.apache.hadoop.conf.Configuration,
+      colName: String): Option[(String, String, Long)] = {
+    val blocks = files.flatMap { f =>
+      val p = new org.apache.hadoop.fs.Path(f)
+      footer(p.getFileSystem(conf).getFileStatus(p), conf).getBlocks
+        .asScala.toSeq
+    }
+    stringMinMax(blocks, conf, colName)
+      .map { case (mn, mx) => (mn, mx, blocks.map(_.getRowCount).sum) }
+  }
+
+  private def stringMinMax(
+      blocks: Seq[org.apache.parquet.hadoop.metadata.BlockMetaData],
+      conf: org.apache.hadoop.conf.Configuration,
       colName: String): Option[(String, String)] = {
     // with `parquet.statistics.truncate.length` set, a bound longer
     // than the limit is stored cut to a code-point boundary at most 3
@@ -220,7 +278,7 @@ object Tables {
     // a bound, not a value, so no bound that long is trusted
     val maybeCut = conf.getInt(org.apache.parquet.hadoop.ParquetOutputFormat
       .STATISTICS_TRUNCATE_LENGTH, Int.MaxValue) - 3
-    columnStats(path, conf, colName).flatMap { stats =>
+    columnStats(blocks, colName).flatMap { stats =>
       val bounds = stats.collect {
         case bs: org.apache.parquet.column.statistics.BinaryStatistics =>
           (bs.genericGetMin.getBytes, bs.genericGetMax.getBytes)
@@ -263,7 +321,7 @@ object Tables {
   def parquetLongMax(path: String,
       conf: org.apache.hadoop.conf.Configuration,
       colName: String): Option[Long] =
-    columnStats(path, conf, colName).flatMap { stats =>
+    columnStats(footerBlocks(path, conf), colName).flatMap { stats =>
       val maxes = stats.collect {
         case ls: org.apache.parquet.column.statistics.LongStatistics =>
           ls.getMax
@@ -278,10 +336,11 @@ object Tables {
     * the column or usable stats — one such group makes the whole figure
     * unknown; an all-null group just contributes nothing (SQL min/max
     * ignore nulls). */
-  private def columnStats(path: String,
-      conf: org.apache.hadoop.conf.Configuration, colName: String):
+  private def columnStats(
+      blocks: Seq[org.apache.parquet.hadoop.metadata.BlockMetaData],
+      colName: String):
       Option[Seq[org.apache.parquet.column.statistics.Statistics[_]]] = {
-    val stats = footerBlocks(path, conf).map(_.getColumns.asScala
+    val stats = blocks.map(_.getColumns.asScala
       .find(_.getPath.toDotString == colName).map(_.getStatistics).orNull)
     if (stats.exists(st => st == null || st.isEmpty)) None
     else Some(stats.filter(_.hasNonNullValue))
@@ -329,22 +388,26 @@ object Tables {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(conf)
     if (!fs.exists(p)) return Nil
-    val baseDepth = p.toUri.getPath.split("/").length
-    def visible(f: org.apache.hadoop.fs.Path): Boolean =
-      f.toUri.getPath.split("/").drop(baseDepth)
-        .forall(seg => !seg.startsWith("_") && !seg.startsWith("."))
     // a hidden directory hides everything below it, so it is not entered
     def walk(dir: org.apache.hadoop.fs.Path)
         : Seq[org.apache.hadoop.fs.FileStatus] =
-      fs.listStatus(dir).toSeq.filter(f => visible(f.getPath)).flatMap {
-        f => if (f.isDirectory) walk(f.getPath) else Seq(f)
-      }
-    walk(p).flatMap { f =>
-      val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf))
-      try rd.getFooter.getBlocks.asScala.toSeq
-      finally rd.close()
-    }
+      fs.listStatus(dir).toSeq.filter(f => visibleName(f.getPath.getName))
+        .flatMap(f => if (f.isDirectory) walk(f.getPath) else Seq(f))
+    val root = fs.getFileStatus(p)
+    (if (root.isDirectory) walk(p) else Seq(root))
+      .flatMap(f => footer(f, conf).getBlocks.asScala.toSeq)
+  }
+
+  private def visibleName(name: String): Boolean =
+    !name.startsWith("_") && !name.startsWith(".")
+
+  private def footer(f: org.apache.hadoop.fs.FileStatus,
+      conf: org.apache.hadoop.conf.Configuration):
+      org.apache.parquet.hadoop.metadata.ParquetMetadata = {
+    val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf))
+    try rd.getFooter
+    finally rd.close()
   }
 
   /** Register an arbitrary directory with the staged-path reaper —

@@ -1,7 +1,8 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 import graft.core.Tables
 import graft.ops.Relational
@@ -21,22 +22,44 @@ object Pipelines {
     *
     * The reference alternates driver-JDBC and cluster dataflow four
     * times; here the same choreography is explicit and
-    * non-exception-swallowing. */
+    * non-exception-swallowing. Every metadata question is answered on
+    * the driver: the load range and stg row count from the stg footers
+    * (a bare parquet stg; anything else runs the agg), the ODS schema
+    * and load-max-dw-id from the ODS footers, the published count from
+    * the new footers. A first load merges against an empty frame; the
+    * publish creates the ODS. Spark jobs per merge with a bare parquet
+    * stg, counting the caller's stg schema read:
+    *   - new-row numbering on the driver path (stg rows ≤
+    *     `spark.graft.driverPath.maxRows`): 4 on a first load (schema
+    *     read, rng append, the single-task numbering sort, the write)
+    *     and 6 on a later one (plus the stg and ODS join shuffles);
+    *   - above the limit, the two-phase numbering of
+    *     [[Relational.surrogateKeysOrdered]] adds its range-sample and
+    *     count jobs in place of the sort: 6 and 8. */
   def odsMerge(spark: SparkSession, stg: DataFrame, odsPath: String,
                naturalKey: Seq[String], valueCols: Seq[String],
                idCol: String, orderCol: String, dtCol: String,
                rngPath: String): Long = {
     // 0. heal a crashed previous publish FIRST: with the ods path
-    // missing and the last build at __replaced, createTableIf would
-    // otherwise re-create an EMPTY ods and the merge would silently
-    // lose all history + reissue surrogate ids from 1
+    // missing and the last build at __replaced, the merge would take
+    // this for a first load and silently lose all history + reissue
+    // surrogate ids from 1
     TableOps.restoreInterrupted(odsPath)
-    // 1. load-range bookkeeping (save-and-load-rng-dt!)
-    TableOps.saveAndLoadRng(spark, stg, dtCol, rngPath)
-    // 2. current ods (create if first load)
-    TableOps.createTableIf(spark, odsPath,
-      stg.schema.add(idCol, org.apache.spark.sql.types.LongType))
-    val ods = spark.read.parquet(odsPath)
+    // 1. load-range bookkeeping (save-and-load-rng-dt!); its row count
+    // bounds the rows that need new ids
+    val (_, _, stgRows) = TableOps.saveAndLoadRng(spark, stg, dtCol,
+      rngPath)
+    // 2. current ods, or an empty one on the first load — the same
+    // all-nullable schema a read of a published ods has
+    val conf = spark.sessionState.newHadoopConf()
+    val firstLoad = !java.nio.file.Files.exists(
+      java.nio.file.Paths.get(odsPath))
+    val ods =
+      if (firstLoad) spark.createDataFrame(
+        java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+        GraftBridge.asNullable(stg.schema.add(idCol, LongType)))
+      else spark.read.schema(Tables.parquetSchema(spark, odsPath))
+        .parquet(odsPath)
     // 3. merge: stg wins per column, ods ids preserved
     val merged = Relational.fullOuterMerge(
       stg.withColumn(idCol, lit(null).cast("long")), ods,
@@ -45,20 +68,20 @@ object Pipelines {
     // load-max-dw-id read from the ods footers; an empty ods gives 0,
     // and a row group without usable stats falls back, loudly, to the
     // agg job
-    val conf = spark.sessionState.newHadoopConf()
-    val maxId = Tables.parquetLongMax(odsPath, conf, idCol).getOrElse {
-      if (Tables.parquetRowCount(odsPath, conf) == 0L) 0L
-      else {
-        log.warn(s"odsMerge: no usable footer stats for '$idCol' under " +
-          s"$odsPath; computing load-max-dw-id with an agg job")
-        ods.agg(max(col(idCol))).first() match {
-          case r if r.isNullAt(0) => 0L
-          case r => r.getLong(0)
+    val maxId = if (firstLoad) 0L
+      else Tables.parquetLongMax(odsPath, conf, idCol).getOrElse {
+        if (Tables.parquetRowCount(odsPath, conf) == 0L) 0L
+        else {
+          log.warn(s"odsMerge: no usable footer stats for '$idCol' " +
+            s"under $odsPath; computing load-max-dw-id with an agg job")
+          ods.agg(max(col(idCol))).first() match {
+            case r if r.isNullAt(0) => 0L
+            case r => r.getLong(0)
+          }
         }
       }
-    }
     val keyed = Relational.surrogateKeysOrdered(merged, idCol, orderCol,
-      maxId)
+      maxId, newRowsAtMost = Some(stgRows))
     // 5. staged write + atomic publish (replace-into-ods); the returned
     // count is the published ods's footer row count, not a read-back
     val staged = odsPath + "__staged"

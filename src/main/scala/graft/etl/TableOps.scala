@@ -7,6 +7,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
+import graft.core.Tables
+
 /** Driver-side orchestration operators (SURVEY §2.1 "JDBC driver-side
   * SQL" + §2.10 incremental bookkeeping). The reference runs these as
   * DDL/DML on Postgres around Cascalog flows (reference
@@ -16,6 +18,7 @@ import org.apache.spark.sql.types.StructType
   * steps.
   */
 object TableOps {
+  private val log = org.slf4j.LoggerFactory.getLogger("graft.etl.TableOps")
 
   /** This module's warehouse abstraction is a LOCAL parquet directory
     * tree (the sandbox posture of the reference's Postgres warehouse):
@@ -224,17 +227,56 @@ object TableOps {
 
   /** `save-and-load-rng-dt!` (trgx.clj:130-164): record the load's
     * [min, max] range + row count into the `<stg>_rng` bookkeeping
-    * table; returns the recorded range. */
+    * table; returns the recorded range.
+    *
+    * When `stg` is a bare scan of non-partitioned parquet files with a
+    * STRING dt, the range comes from those files' footers
+    * ([[graft.core.Tables.parquetFilesStringRange]]) with no Spark
+    * job; every other input (a filter, a projection, a cached frame, a
+    * DATE dt, footers without usable stats, an all-null dt) runs the
+    * min/max/count agg job, and one log line says why. */
   def saveAndLoadRng(spark: SparkSession, stg: DataFrame, dtCol: String,
                      rngPath: String): (String, String, Long) = {
     val dt = dtAsIsoString(stg, dtCol)
-    val r = stg.agg(min(dt).as("mn"), max(dt).as("mx"),
-                    count(lit(1)).as("cnt")).first()
-    val (mn, mx, cnt) = (r.getString(0), r.getString(1), r.getLong(2))
+    val (mn, mx, cnt) = footerRange(stg, dtCol) match {
+      case Right(range) => range
+      case Left(why) =>
+        log.info(s"saveAndLoadRng: $why; computing the load range of " +
+          s"'$dtCol' with an agg job")
+        val r = stg.agg(min(dt).as("mn"), max(dt).as("mx"),
+                        count(lit(1)).as("cnt")).first()
+        (r.getString(0), r.getString(1), r.getLong(2))
+    }
     import spark.implicits._
     Seq((mn, mx, cnt)).toDF("dw_bgn_dt", "dw_end_dt", "dw_ld_cnt")
       .write.mode("append").parquet(rngPath)
     (mn, mx, cnt)
+  }
+
+  /** The load range of `stg` from parquet footers, or why not: only a
+    * plan that is exactly one non-partitioned parquet relation reads
+    * its own input files, so the footers see every row it returns. */
+  private def footerRange(stg: DataFrame, dtCol: String):
+      Either[String, (String, String, Long)] = {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
+      LogicalRelation}
+    import org.apache.spark.sql.execution.datasources.parquet
+      .ParquetFileFormat
+    import org.apache.spark.sql.types.StringType
+    stg.queryExecution.optimizedPlan match {
+      case l: LogicalRelation => l.relation match {
+        case h: HadoopFsRelation if h.fileFormat.isInstanceOf[ParquetFileFormat]
+            && h.partitionSchema.isEmpty =>
+          if (stg.schema(dtCol).dataType != StringType)
+            Left(s"dt is ${stg.schema(dtCol).dataType.simpleString}, and " +
+              "only string footer statistics are read")
+          else Tables.parquetFilesStringRange(h.location.inputFiles.toSeq,
+              stg.sparkSession.sessionState.newHadoopConf(), dtCol)
+            .toRight("the stg footers carry no usable statistics for it")
+        case _ => Left("stg is not a non-partitioned parquet scan")
+      }
+      case _ => Left("stg is not a bare file scan")
+    }
   }
 
   /** Delta/shadow/switch incremental pattern

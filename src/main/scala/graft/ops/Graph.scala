@@ -1910,8 +1910,11 @@ object Graph {
 
   /** The one driver-path policy of the size-gated operators (the
     * PageRank family, HITS, both label propagations, bow-tie, the SCC
-    * census, `Dedup.connectedComponents` and both `Apportion`
-    * methods): an input of `n` edges/rows — a count each operator
+    * census, `Dedup.connectedComponents`, both `Apportion` methods and
+    * the new-row numbering of `Relational.surrogateKeysOrdered`, whose
+    * `n` is the caller's bound on new rows, numbered by one single-task
+    * window instead of the two-phase pass): an input of `n` edges/rows
+    * — a count each operator
     * already has from its staging write's footers — runs the exact
     * driver-side replica when `n` is at most the session conf
     * `spark.graft.driverPath.maxRows` (default 100000, which keeps the

@@ -225,15 +225,37 @@ object Relational {
     * is dense in `orderCol` order. The numbering stage runs at
     * `spark.sql.shuffle.partitions` unless `nPartitions` > 0 pins it
     * (see [[resolvePartitions]]); a caller that writes the result
-    * straight out gets one file per numbering task. */
+    * straight out gets one file per numbering task.
+    *
+    * `newRowsAtMost`: a caller-known upper bound on the null-id rows
+    * (an ODS merge knows its stg row count). When [[Graph.driverPath]]
+    * admits that bound, only the null-id rows are numbered, by one
+    * `row_number()` window over `orderCol` — a single-task sort of at
+    * most `spark.graft.driverPath.maxRows` rows — and unioned with the
+    * id-carrying rows, which the numbering neither shuffles nor
+    * counts; the union
+    * is coalesced to the session's shuffle width so a caller writing
+    * it out gets at most that many files. Both paths give the same ids
+    * whenever `orderCol` is a total order. Without a bound, or above
+    * the limit, the two-phase path runs. */
   def surrogateKeysOrdered(df: DataFrame, idCol: String, orderCol: String,
                            maxExisting: Long,
-                           nPartitions: Int = 0): DataFrame =
-    surrogateKeysDistributed(
-      df.repartitionByRange(resolvePartitions(df, nPartitions),
-          col(orderCol))
-        .sortWithinPartitions(orderCol),
-      idCol, maxExisting)
+                           nPartitions: Int = 0,
+                           newRowsAtMost: Option[Long] = None): DataFrame =
+    if (newRowsAtMost.exists(Graph.driverPath(df.sparkSession, _))) {
+      val numbered = df.filter(col(idCol).isNull).withColumn(idCol,
+        lit(maxExisting) +
+          row_number().over(Window.orderBy(col(orderCol))).cast("long"))
+      df.filter(col(idCol).isNotNull)
+        .withColumn(idCol, col(idCol).cast("long"))
+        .union(numbered)
+        .coalesce(resolvePartitions(df, 0))
+    } else
+      surrogateKeysDistributed(
+        df.repartitionByRange(resolvePartitions(df, nPartitions),
+            col(orderCol))
+          .sortWithinPartitions(orderCol),
+        idCol, maxExisting)
 
   /** nPartitions ≤ 0 (the default everywhere) resolves to the
     * session's shuffle-partition setting, so the two-phase helpers'

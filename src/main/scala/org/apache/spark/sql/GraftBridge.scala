@@ -68,6 +68,30 @@ object GraftBridge {
         org.apache.spark.SparkContext.getActive.map(_.conf)): Unit =
     conf.foreach(_.setIfMissing(key, value))
 
+  /** One parquet footer's Spark schema exactly as Spark's own schema
+    * inference (`ParquetFileFormat.mergeSchemasInParallel`) derives it:
+    * the writer's embedded Spark schema when present, else Spark's
+    * footer converter, configured from `spark`'s conf the same way. */
+  def parquetFooterSchema(spark: SparkSession,
+      footer: org.apache.parquet.hadoop.Footer)
+      : org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.execution.datasources.parquet.{
+      ParquetFileFormat, ParquetToSparkSchemaConverter}
+    val conf = spark.sessionState.conf
+    ParquetFileFormat.readSchemaFromFooter(footer,
+      new ParquetToSparkSchemaConverter(
+        assumeBinaryIsString = conf.isParquetBinaryAsString,
+        assumeInt96IsTimestamp = conf.isParquetINT96AsTimestamp,
+        inferTimestampNTZ = conf.parquetInferTimestampNTZEnabled,
+        nanosAsLong = conf.legacyParquetNanosAsLong,
+        respectUnknownTypeAnnotation =
+          conf.parquetReaderRespectUnknownTypeAnnotation))
+  }
+
+  /** `schema` with every level nullable, as a file relation reads it. */
+  def asNullable(schema: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = schema.asNullable
+
   /** Table-function twin of [[registerFunction]]. */
   def registerTableFunction(
       spark: SparkSession,

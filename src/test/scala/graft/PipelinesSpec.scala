@@ -56,17 +56,19 @@ class PipelinesSpec extends AnyFunSuite {
     Pipelines.odsMerge(spark, stg, ods, Seq("k"), Seq("v", "dt"), "dw_id",
       "k", "dt", rng)
 
-  test("odsMerge: three loads keep window-form ids, return the published " +
-       "count and publish at most shuffle-partitions files") {
+  /** Three overlapping loads into a fresh ODS, each checked against the
+    * window-form id reference, the published count and the file bound;
+    * returns each load's published (k → (v, dw_id)) and count. */
+  private def threeLoads(tag: String): Seq[(Map[Long, (String, Long)], Long)] = {
     import org.apache.spark.sql.expressions.Window
-    val base = TestSpark.tmpPath("ods_multi").toString
+    val base = TestSpark.tmpPath(tag).toString
     val ods = s"$base/ods"; val rng = s"$base/rng"
     val width = spark.conf.get("spark.sql.shuffle.partitions").toInt
     // overlapping key ranges: each load updates some keys and adds new
     // ones; k is unique per load and is the numbering order
     val loads = Seq((0L, 300L), (200L, 520L), (100L, 700L))
     var prev = Map.empty[Long, Long]
-    for (((lo, hi), i) <- loads.zipWithIndex) {
+    val published = for (((lo, hi), i) <- loads.zipWithIndex) yield {
       val stg = spark.range(lo, hi).select(($"id" * 7919 % 1000003).as("k"),
         concat(lit(s"v$i-"), $"id".cast("string")).as("v"),
         lit(s"2016-01-0${i + 1}").as("dt"))
@@ -80,8 +82,10 @@ class PipelinesSpec extends AnyFunSuite {
           row_number().over(Window.partitionBy($"dw_id".isNull)
             .orderBy($"k"))))
         .as[(Long, Long)].collect().toMap
-      val out = spark.read.parquet(ods).select("k", "dw_id")
-        .as[(Long, Long)].collect().toMap
+      val rows = spark.read.parquet(ods).select("k", "v", "dw_id")
+        .as[(Long, String, Long)].collect()
+        .map(r => r._1 -> ((r._2, r._3))).toMap
+      val out = rows.map { case (k, (_, id)) => k -> id }
       assert(out == ref, s"load $i ids")
       assert(n == spark.read.parquet(ods).count(), s"load $i count")
       val files = new java.io.File(ods).listFiles()
@@ -89,8 +93,100 @@ class PipelinesSpec extends AnyFunSuite {
       assert(files >= 1 && files <= width,
         s"load $i published $files files at width $width")
       prev = out
+      (rows, n)
     }
     assert(prev.size == 700)
+    published
+  }
+
+  test("odsMerge: three loads keep window-form ids, return the published " +
+       "count and publish at most shuffle-partitions files") {
+    threeLoads("ods_multi")
+  }
+
+  test("odsMerge: the driver-path and two-phase numberings publish the " +
+       "same rows, ids and counts") {
+    val tp0 = graft.ops.Relational.twoPhaseRunCount
+    val driver = threeLoads("ods_driver")
+    val tp1 = graft.ops.Relational.twoPhaseRunCount
+    val staged = TestSpark.withConf(TestSpark.stagedOnly) {
+      threeLoads("ods_staged")
+    }
+    assert(tp1 == tp0, "every load is under the default limit")
+    assert(graft.ops.Relational.twoPhaseRunCount - tp1 == 3L)
+    assert(driver == staged)
+  }
+
+  test("odsMerge: a load above spark.graft.driverPath.maxRows numbers its " +
+       "new rows with the two-phase path") {
+    val base = TestSpark.tmpPath("ods_over_limit").toString
+    val ods = s"$base/ods"; val rng = s"$base/rng"
+    val stg1 = spark.range(0, 50).select(($"id" * 2).as("k"),
+      lit("a").as("v"), lit("2016-01-01").as("dt"))
+    val stg2 = spark.range(0, 150).select(($"id" * 3 + 1).as("k"),
+      lit("b").as("v"), lit("2016-01-02").as("dt"))
+    TestSpark.withConf("spark.graft.driverPath.maxRows" -> "100") {
+      val tp0 = graft.ops.Relational.twoPhaseRunCount
+      assert(merge(stg1, ods, rng) == 50L)
+      assert(graft.ops.Relational.twoPhaseRunCount == tp0)
+      assert(merge(stg2, ods, rng) == 50L + 150L -
+        stg1.select("k").intersect(stg2.select("k")).count())
+      assert(graft.ops.Relational.twoPhaseRunCount == tp0 + 1L)
+    }
+    // new keys continue from 50 in k order
+    val ids = spark.read.parquet(ods).select("k", "dw_id")
+      .as[(Long, Long)].collect().toMap
+    val fresh = ids.filter(_._2 > 50L).toSeq.sortBy(_._1).map(_._2)
+    assert(fresh == (51L to ids.size.toLong))
+    assert(ids.filter(_._2 <= 50L).keySet ==
+      (0L until 50L).map(_ * 2).toSet)
+  }
+
+  test("odsMerge: a first load writes no empty ODS — the publish creates " +
+       "it — and a crash left at __replaced is healed, not reloaded") {
+    val base = TestSpark.tmpPath("ods_first").toString
+    val ods = s"$base/ods"; val rng = s"$base/rng"
+    // the stg's rows check, while the merge computes them, that no ODS
+    // exists yet
+    val odsAbsent = udf { (k: Long) =>
+      require(!java.nio.file.Files.exists(java.nio.file.Paths.get(ods)),
+        s"$ods exists before the publish"); k
+    }
+    val stg = Seq((3L, "c", "2016-01-01"), (1L, "a", "2016-01-01"),
+                  (2L, "b", "2016-01-02"))
+      .toDF("k", "v", "dt").withColumn("k", odsAbsent($"k"))
+    assert(merge(stg, ods, rng) == 3L)
+    val first = spark.read.parquet(ods).select("k", "dw_id")
+      .as[(Long, Long)].collect().toMap
+    assert(first == Map(1L -> 1L, 2L -> 2L, 3L -> 3L))
+    // a crash between replaceInto's move-aside and move-in
+    assert(new java.io.File(ods).renameTo(new java.io.File(ods + "__replaced")))
+    assert(merge(Seq((4L, "d", "2016-01-03")).toDF("k", "v", "dt"),
+      ods, rng) == 4L)
+    val healed = spark.read.parquet(ods).select("k", "dw_id")
+      .as[(Long, Long)].collect().toMap
+    assert(healed == first + (4L -> 4L))
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(ods + "__replaced")))
+  }
+
+  test("odsMerge over a parquet stg runs at most five jobs beyond the " +
+       "stg's own schema read, on the first and a later load") {
+    val base = TestSpark.tmpPath("ods_jobs").toString
+    val ods = s"$base/ods"; val rng = s"$base/rng"
+    for (i <- 0 until 2) {
+      val stgPath = s"$base/stg_$i"
+      spark.range(i * 100L, i * 100L + 300L).select($"id".as("k"),
+          concat(lit(s"v$i-"), $"id".cast("string")).as("v"),
+          lit(s"2016-01-0${i + 1}").as("dt"))
+        .repartition(2).write.parquet(stgPath)
+      val stg = spark.read.parquet(stgPath)
+      val (n, jobs) = TestSpark.jobsRun(merge(stg, ods, rng))
+      assert(n == 300L + 100L * i)
+      assert(jobs <= 5, s"load $i ran $jobs jobs")
+    }
+    assert(spark.read.parquet(rng).as[(String, String, Long)].collect()
+      .toSet == Set(("2016-01-01", "2016-01-01", 300L),
+                    ("2016-01-02", "2016-01-02", 300L)))
   }
 
   test("odsMerge: an ods without footer stats falls back to the max agg") {

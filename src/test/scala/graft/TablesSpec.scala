@@ -166,4 +166,34 @@ class TablesSpec extends AnyFunSuite {
       assert(again.filter(col("b").isNotNull).count() == 3L)
     } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
   }
+
+  test("parquetSchema equals Spark's inference on a published ODS and " +
+       "falls back to it when footers disagree") {
+    val dir = TestSpark.tmpPath("ts_driver_schema")
+    try {
+      val ods = dir.resolve("ods").toString
+      graft.etl.Pipelines.odsMerge(spark,
+        spark.range(0, 40).select(col("id").as("k"),
+          col("id").cast("string").as("v"), lit("2016-01-01").as("dt")),
+        ods, Seq("k"), Seq("v", "dt"), "dw_id", "k", "dt",
+        dir.resolve("rng").toString)
+      val (sc, jobs) = TestSpark.jobsRun(Tables.parquetSchema(spark, ods))
+      assert(sc == spark.read.parquet(ods).schema)
+      assert(jobs == 0)
+      // two part files whose footers disagree on a column's type
+      val mixed = dir.resolve("mixed").toString
+      spark.range(0, 3).select(col("id").as("a"))
+        .write.parquet(mixed + "/x")
+      spark.range(0, 3).select(col("id").cast("string").as("a"))
+        .write.parquet(mixed + "/y")
+      Files.createDirectories(Paths.get(mixed, "t"))
+      for (sub <- Seq("x", "y"); f <- Paths.get(mixed, sub).toFile.listFiles
+           if f.getName.endsWith(".parquet"))
+        Files.move(f.toPath, Paths.get(mixed, "t", s"$sub-${f.getName}"))
+      val t = Paths.get(mixed, "t").toString
+      val (msc, mjobs) = TestSpark.jobsRun(Tables.parquetSchema(spark, t))
+      assert(msc == spark.read.parquet(t).schema)
+      assert(mjobs >= 1, "disagreeing footers must run Spark's inference")
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
 }

@@ -35,6 +35,32 @@ object TestSpark {
     * the size-gated graph/apportion operators take their staged loops. */
   val stagedOnly: (String, String) = "spark.graft.driverPath.maxRows" -> "0"
 
+  /** Run `body` and count the Spark jobs it launched on this thread
+    * (tagged with a fresh job group, so concurrent work is not
+    * counted; the listener bus is drained before reading). */
+  def jobsRun[T](body: => T): (T, Int) = {
+    val group = "jobs-" + java.util.UUID.randomUUID()
+    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(
+              _.getProperty("spark.jobGroup.id") == group))
+          n.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, group)
+    try {
+      val out = body
+      org.apache.spark.GraftTestBridge.waitListenerBusEmpty(sc, 60000)
+      (out, n.get)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
   /** Scratch dir for a test, under the relocatable [[graft.core.Tables.tmpDir]]
     * (never a hardcoded checkout path — honors the GRAFT_TMP_DIR
     * override the production code documents). */

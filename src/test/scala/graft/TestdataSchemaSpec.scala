@@ -127,4 +127,18 @@ class TestdataSchemaSpec extends AnyFunSuite {
     assert(Tables.events(spark, microsDir.toString).schema("ts").dataType
       == org.apache.spark.sql.types.TimestampType)
   }
+
+  test("Tables.parquetSchema equals Spark's inference on every sf0.01 " +
+       "table, events under nanosAsLong too") {
+    val dir = java.nio.file.Paths.get(sfDir).resolveSibling("sf0.01")
+    for (t <- Tables.all) {
+      val p = dir.resolve(s"$t.parquet").toString
+      assert(Tables.parquetSchema(spark, p) == spark.read.parquet(p).schema,
+        t)
+    }
+    TestSpark.withConf("spark.sql.legacy.parquet.nanosAsLong" -> "true") {
+      val p = dir.resolve("events.parquet").toString
+      assert(Tables.parquetSchema(spark, p) == spark.read.parquet(p).schema)
+    }
+  }
 }

@@ -4,6 +4,8 @@ working tree, on one host, with the same seeds.
 
     python3 scripts/perfbench_ab.py --base HEAD~1 --workload report_window \
         --seeds 411 412 413 414 415 --out ab_report_window.json
+    python3 scripts/perfbench_ab.py --base HEAD~1 --bench q1_agg,corpus_shard \
+        --seeds 1 2 3 4 5 6 --out ab_bench.json
 
 The base revision's committed files are exported (`git archive`) into a
 temporary directory, and `perfbench/run.py --trace 0` runs there and in
@@ -27,6 +29,19 @@ the number of seeds on which the change was better and a verdict:
 The same figures, with every run's metrics, go to `--out` as JSON.
 Metric names, units, bounds and better-directions come from
 BENCHMARK.json; nothing under perfbench/ is modified.
+
+`--bench Q1,Q2,...` compares `graft.Bench` instead, with the same
+export, alternation, summary and verdicts. Each side builds its library
+with its own checkout's `perfbench/build.py` and runs `java ... graft.Bench`
+with `SPARK_GRAFT_ONLY` set to the queries and its own artifact and
+scratch directory per run (heap: `SPARK_DRIVER_MEM`, default 8g; input:
+Bench's `SPARK_GRAFT_SF_DIR`). `SPARK_GRAFT_NO_CANARY=1` makes bases
+that still carry Bench's host canaries skip them; such bases also give
+staged and streaming queries at least 5 warm passes, and warm passes
+speed up pass over pass, so compare against them with
+`SPARK_GRAFT_WARM_PASSES=5` on both sides. The metric of a query is its
+`queries_warm` median, judged with `run_s`'s bound. Bench takes no
+seed: the seeds only label and order the pairs.
 """
 import math
 import argparse
@@ -76,6 +91,46 @@ def run_once(checkout, workload, seed, seconds):
     out["metrics"] = {k: v["value"] for k, v in out["metrics"].items()}
     out["wall_s"] = wall
     return out
+
+
+def add_opens():
+    """The `--add-opens` flags perfbench's harness runs its JVM with."""
+    sys.path.insert(0, os.path.join(ROOT, "perfbench"))
+    import run
+    sys.path.pop(0)
+    return [a for p in run.OPENS
+            for a in ("--add-opens", f"java.base/{p}=ALL-UNNAMED")]
+
+
+def bench_once(checkout, classpath, opens, queries, run_dir):
+    """One `graft.Bench` run of `queries` in a fresh JVM; its
+    `queries_warm` medians are the run's metrics."""
+    os.makedirs(os.path.join(run_dir, "tmp"))
+    out = os.path.join(run_dir, "bench.json")
+    env = dict(os.environ, SPARK_GRAFT_ONLY=",".join(queries),
+               SPARK_GRAFT_NO_CANARY="1", GRAFT_BENCH_OUT=out,
+               GRAFT_TMP_DIR=os.path.join(run_dir, "graft_tmp"))
+    cmd = (["java", "-Xmx" + os.environ.get("SPARK_DRIVER_MEM", "8g"),
+            "-Djava.io.tmpdir=" + os.path.join(run_dir, "tmp")]
+           + opens + ["-cp", classpath, "graft.Bench"])
+    t0 = time.perf_counter()
+    proc = subprocess.run(cmd, cwd=run_dir, env=env, capture_output=True,
+                          text=True)
+    wall = time.perf_counter() - t0
+    if proc.returncode != 0 or not os.path.exists(out):
+        sys.stderr.write(proc.stderr[-4000:])
+        raise SystemExit(f"graft.Bench failed in {checkout} "
+                         f"(exit {proc.returncode})")
+    with open(out) as fh:
+        art = json.load(fh)
+    missing = [q for q in queries if q not in art["queries_warm"]]
+    if missing:
+        raise SystemExit(f"graft.Bench in {checkout} has no warm time for "
+                         f"{missing}: {art['failed']}")
+    shutil.rmtree(run_dir, ignore_errors=True)
+    return {"correct": True, "attempted": len(queries), "failed": 0,
+            "metrics": {q: art["queries_warm"][q] for q in queries},
+            "wall_s": wall}
 
 
 def quartiles(xs):
@@ -130,15 +185,25 @@ def main(argv=None):
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--base", required=True,
                     help="git revision to compare the working tree against")
-    ap.add_argument("--workload", required=True)
+    mode = ap.add_mutually_exclusive_group(required=True)
+    mode.add_argument("--workload")
+    mode.add_argument("--bench", metavar="Q1,Q2,...",
+                      help="compare graft.Bench on these queries")
     ap.add_argument("--seeds", type=int, nargs="+", required=True)
-    ap.add_argument("--out", help="JSON output path "
-                    "(default: ab_<workload>.json in the current directory)")
+    ap.add_argument("--out", help="JSON output path (default: "
+                    "ab_<workload>.json or ab_bench.json in the current "
+                    "directory)")
     args = ap.parse_args(argv)
 
     with open(os.path.join(ROOT, "BENCHMARK.json")) as fh:
         bench = json.load(fh)
     metrics, seconds = bench["end_to_end"], bench["run_seconds"]
+    queries = args.bench.split(",") if args.bench else []
+    if queries:
+        bound = next(m["bound"] for m in metrics if m["name"] == "run_s")
+        metrics = [{"name": q, "unit": "s", "better": "lower",
+                    "bound": bound} for q in queries]
+    label = args.workload or "bench"
     base_sha = git("rev-parse", "--verify", args.base + "^{commit}")
     head_sha = git("rev-parse", "HEAD")
     dirty = bool(git("status", "--porcelain", "--untracked-files=no"))
@@ -150,10 +215,20 @@ def main(argv=None):
         os.makedirs(base_dir)
         export(base_sha, base_dir)
         sides = {"base": base_dir, "change": ROOT}
+        classpaths = {side: subprocess.run(
+            [sys.executable, os.path.join(d, "perfbench", "build.py")],
+            cwd=d, check=True, capture_output=True, text=True)
+            .stdout.strip() for side, d in sides.items()} if queries else {}
+        opens = add_opens() if queries else []
         for i, seed in enumerate(args.seeds):
             order = ("base", "change") if i % 2 == 0 else ("change", "base")
             for side in order:
-                r = run_once(sides[side], args.workload, seed, seconds)
+                if queries:
+                    r = bench_once(sides[side], classpaths[side], opens,
+                                   queries,
+                                   os.path.join(tmp, f"{side}_{seed}"))
+                else:
+                    r = run_once(sides[side], args.workload, seed, seconds)
                 runs.append({"seed": seed, "side": side,
                              "correct": r["correct"],
                              "attempted": r["attempted"],
@@ -168,10 +243,11 @@ def main(argv=None):
         shutil.rmtree(tmp, ignore_errors=True)
 
     seeds, summary = summarize(runs, metrics)
-    print(f"\n{args.workload}: base {base_sha[:12]} vs working tree "
+    print(f"\n{label}: base {base_sha[:12]} vs working tree "
           f"({head_sha[:12]}{' + edits' if dirty else ''}), "
-          f"{len(seeds)} seeds, --seconds {seconds:g}")
-    print(f"  {'metric':20s} {'base':>10s} {'change':>10s} {'delta':>8s} "
+          f"{len(seeds)} seeds"
+          + ("" if queries else f", --seconds {seconds:g}"))
+    print(f"  {'metric':24s} {'base':>10s} {'change':>10s} {'delta':>8s} "
           f"{'base IQR/med':>13s} {'better':>7s} {'gap/IQR':>8s}  verdict")
     for name, s in summary.items():
         delta = "n/a" if s["delta"] is None else f"{100 * s['delta']:+.1f}%"
@@ -179,15 +255,16 @@ def main(argv=None):
                   else f"{s['base_iqr_over_median']:.3f}")
         gap = ("n/a" if s["gap_over_base_iqr"] is None
                else f"{s['gap_over_base_iqr']:+.2f}")
-        print(f"  {name:20s} {s['base_median']:10.3f} "
+        print(f"  {name:24s} {s['base_median']:10.3f} "
               f"{s['change_median']:10.3f} {delta:>8s} {spread:>13s} "
               f"{s['pairs_better']:>3d}/{len(seeds)} {gap:>8s}  "
               f"{s['verdict']}")
-    out = args.out or f"ab_{args.workload}.json"
+    out = args.out or f"ab_{label}.json"
     with open(out, "w") as fh:
         json.dump({
-            "workload": args.workload, "seeds": seeds,
-            "seconds": seconds, "cores": len(os.sched_getaffinity(0)),
+            "workload": args.workload, "bench": queries or None,
+            "seeds": seeds, "seconds": None if queries else seconds,
+            "cores": len(os.sched_getaffinity(0)),
             "base": {"rev": args.base, "commit": base_sha},
             "change": {"commit": head_sha, "uncommitted_edits": dirty},
             "all_correct": all(r["correct"] for r in runs),

@@ -37,6 +37,24 @@ object SparkEntry {
       Seq("score" -> col("value"), "n" -> col("n")))
   }
 
+  /** The local session the graft mains run on: `local[n]` with n =
+    * `SPARK_GRAFT_CPUS` (default 4) and as many shuffle partitions, the
+    * graft extensions, no UI, and UTC — the precondition of
+    * Tables.events' NTZ cast, without which the events queries would
+    * time and gate zone-shifted timestamps. */
+  def localSession(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.extensions", "graft.sql.GraftExtensions")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     CoreQueries.queries ++ LlmQueries.queries ++ RptQueries.queries ++

@@ -1,20 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  private val log = org.slf4j.LoggerFactory.getLogger("graft.Verify")
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.sql.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession()
     new java.io.File(outDir).mkdirs()
     // iteration aid (mirrors Bench): SPARK_GRAFT_ONLY=a,b,c dumps just
     // those queries; the driver never sets it, so the gate is unaffected
@@ -33,7 +26,7 @@ object Verify {
     // regression (a default df-guard change emptied both sides) was
     // invisible to the hash compare. Row counts come free from the
     // just-written parquet footers (no extra job); zero-row queries are
-    // flagged loudly on stderr and recorded in verify_rowcounts.json.
+    // flagged loudly in the log and recorded in verify_rowcounts.json.
     val rowCounts = scala.collection.mutable.LinkedHashMap[String, Long]()
     val hconf = spark.sessionState.newHadoopConf()
     selected.foreach { case (name, fn) =>
@@ -47,16 +40,15 @@ object Verify {
         // bloat the artifact without adding diagnostic value
         val msg = s"${e.getClass.getName}: ${e.getMessage}".take(400)
         errors(name) = msg
-        System.err.println(s"[verify] $name FAILED: $msg")
+        log.warn(s"$name FAILED: $msg")
       }
       // reap per-query staging dirs so a full-gate run stays bounded
       graft.core.Tables.clearStaged()
     }
     val zeroRows = rowCounts.collect { case (n, 0L) => n }.toSeq
     if (zeroRows.nonEmpty)
-      System.err.println(
-        s"[verify] ZERO-ROW results (vacuous oracle match?): " +
-          zeroRows.mkString(", "))
+      log.warn("ZERO-ROW results (vacuous oracle match?): " +
+        zeroRows.mkString(", "))
     def q(s: String): String = graft.core.Json.quote(s)
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
@@ -67,12 +59,11 @@ object Verify {
     val rcJson = rowCounts
       .map { case (k, v) => s"${q(k)}: $v" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/verify_rowcounts.json"), rcJson)
-    // summary stays on stderr; rc stays 0 so the driver still records
-    // the queries that DID pass (a nonzero rc could void the whole run)
+    // rc stays 0 so the driver still records the queries that DID pass
+    // (a nonzero rc could void the whole run)
     if (errors.nonEmpty)
-      System.err.println(
-        s"[verify] ${errors.size}/${selected.size} queries FAILED: " +
-          errors.keys.mkString(", "))
+      log.warn(s"${errors.size}/${selected.size} queries FAILED: " +
+        errors.keys.mkString(", "))
     spark.stop()
   }
 }

@@ -233,17 +233,6 @@ object Bpe {
         .agg(sum(col("cnt")).as("c"))
         .orderBy(col("c").desc, col("a"), col("b"))
         .limit(1)
-      // loop-body plan evidence (measurement-only, VERDICT r16 #2:
-      // .explain on the returned merges can't see the loop's real
-      // plans): with GRAFT_EXPLAIN_DIR set, dump one early argmax
-      // plan — round 2 carries a pending-merge UDF, the steady shape
-      if (round == 1)
-        sys.env.get("GRAFT_EXPLAIN_DIR").foreach { d =>
-          java.nio.file.Files.writeString(
-            java.nio.file.Paths.get(s"$d/bpe_argmax_round2.txt"),
-            argmax.queryExecution.explainString(
-              org.apache.spark.sql.execution.FormattedMode))
-        }
       val best = argmax.collect()
       if (best.isEmpty) exhausted = true
       else {

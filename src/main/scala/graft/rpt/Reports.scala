@@ -167,16 +167,6 @@ object Reports {
         scala.concurrent.duration.Duration.Inf))
     } finally pool.shutdown()
     val union = frames.reduce(_ unionByName _)
-    // union-job plan evidence (measurement-only, VERDICT r16 #2: the
-    // family's real work runs inside THIS write, invisible to .explain
-    // on the returned sink scan): with GRAFT_EXPLAIN_DIR set, dump the
-    // unioned member plan the sink append executes
-    sys.env.get("GRAFT_EXPLAIN_DIR").foreach { d =>
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"$d/family_union_${members.size}.txt"),
-        union.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode))
-    }
     union.write.mode("append").parquet(sinkPath)
     // every appender writes the ms.report shape (enforced above), so
     // the sink read passes it instead of re-inferring from footers

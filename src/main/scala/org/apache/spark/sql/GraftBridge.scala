@@ -56,6 +56,13 @@ object GraftBridge {
       case _ => df
     }
 
+  /** Block until every event already posted to the context's listener
+    * bus has been delivered: SparkListeners and QueryExecutionListeners
+    * run asynchronously on it, and `listenerBus` is private[spark]. */
+  def waitListenerBusEmpty(sc: org.apache.spark.SparkContext,
+      timeoutMs: Long = 60000): Unit =
+    sc.listenerBus.waitUntilEmpty(timeoutMs)
+
   /** Give `key` the default `value` on a live SparkConf unless the user
     * already set it (builder `.config`, `--conf`, a `-Dspark.*` property
     * or spark-defaults all land there first, so an explicit value always

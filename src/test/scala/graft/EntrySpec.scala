@@ -40,9 +40,9 @@ class EntrySpec extends AnyFunSuite {
     // covers all oracle idioms — string literal, s-interpolated, def
     // reference — which the r14 lambda-only regex ("key" -> ((s) did
     // not (ADVICE r14 #2). Scope is pinned to the registry files so
-    // unrelated maps (Bench.canaryPinned uses `"q1_agg" -> 1.263`)
-    // don't inflate counts; a registry moved to a NEW file shows up
-    // as count 0 here — loud, and the cue to extend the list.
+    // an unrelated map keyed by query names in another file cannot
+    // inflate counts; a registry moved to a NEW file shows up as count
+    // 0 here — loud, and the cue to extend the list.
     val registryFiles = Seq("CoreQueries", "LlmQueries", "RptQueries",
       "CorpusQueries", "SparkEntry")
       .map(n => java.nio.file.Paths.get(s"src/main/scala/graft/$n.scala"))
@@ -65,13 +65,6 @@ class EntrySpec extends AnyFunSuite {
       else None
     }
     assert(bad.isEmpty, bad.mkString("\n"))
-  }
-
-  test("every bench canary query stays registered (a silent rename " +
-       "would null the host factor instead of failing loudly)") {
-    val missing = Bench.canaryPinned.map(_._1)
-      .filterNot(SparkEntry.queries.contains)
-    assert(missing.isEmpty, s"canary queries not registered: $missing")
   }
 
   test("sample queries return rows at sf0.001") {

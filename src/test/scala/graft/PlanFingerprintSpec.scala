@@ -121,7 +121,7 @@ class PlanFingerprintSpec extends AnyFunSuite {
     * tail-scan fingerprint is blind to (the r11 verdict's structural
     * blind spot) — and the fingerprint is the counter-wise SUM across
     * them plus the returned tail plan. The listener bus is drained
-    * through GraftTestBridge before reading, so capture is
+    * through GraftBridge before reading, so capture is
     * deterministic, not sleep-racy. */
   private def constructionFingerprint(
       q: (org.apache.spark.sql.SparkSession, String) =>
@@ -141,8 +141,8 @@ class PlanFingerprintSpec extends AnyFunSuite {
       try {
         val df = q(spark, dir)
         val tailFp = fingerprint(df.queryExecution.executedPlan)
-        org.apache.spark.GraftTestBridge.waitListenerBusEmpty(
-          spark.sparkContext, 60000)
+        org.apache.spark.sql.GraftBridge.waitListenerBusEmpty(
+          spark.sparkContext)
         tailFp
       } finally spark.listenerManager.unregister(listener)
     import scala.jdk.CollectionConverters._

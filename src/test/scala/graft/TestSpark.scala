@@ -53,7 +53,7 @@ object TestSpark {
     sc.setJobGroup(group, group)
     try {
       val out = body
-      org.apache.spark.GraftTestBridge.waitListenerBusEmpty(sc, 60000)
+      org.apache.spark.sql.GraftBridge.waitListenerBusEmpty(sc)
       (out, n.get)
     } finally {
       sc.clearJobGroup()

@@ -7,13 +7,17 @@ working tree, on one host, with the same seeds.
     python3 scripts/perfbench_ab.py --base HEAD~1 --bench q1_agg,corpus_shard \
         --seeds 1 2 3 4 5 6 --out ab_bench.json
 
-The base revision's committed files are exported (`git archive`) into a
-temporary directory, and `perfbench/run.py --trace 0` runs there and in
-the working tree alternately, one pair per seed, each run as long as
-BENCHMARK.json's `run_seconds` (the benchmark's own length). The side
-that goes first alternates from seed to seed, so a slow drift of the
-host charges both sides alike. Each checkout builds its own classes
-under its own `perfbench/.work/`.
+Both sides are exported the same way, with `git archive`, into sibling
+directories of one temporary directory: the base revision's committed
+files, and a snapshot of the working tree (tracked edits and new
+untracked, not ignored, files, written as a tree object through a
+scratch index, so this repository's index, refs and build outputs take
+no part). `perfbench/run.py --trace 0` runs in the two exports
+alternately, one pair per seed, each run as long as BENCHMARK.json's
+`run_seconds` (the benchmark's own length). The side that goes first
+alternates from seed to seed, so a slow drift of the host charges both
+sides alike. Each export builds its own classes, from scratch, under
+its own `perfbench/.work/`.
 
 Prints one line per run, then per-metric medians, the change's delta
 against the base, the base's spread (interquartile range over median),
@@ -73,6 +77,19 @@ def export(rev, dest):
     archive.stdout.close()
     if archive.wait() != 0:
         raise SystemExit(f"git archive {rev} failed")
+
+
+def snapshot(scratch):
+    """A tree object holding the working tree as `git add -A` would
+    stage it, written through the index file `scratch` so the
+    repository's own index is left alone."""
+    env = dict(os.environ, GIT_INDEX_FILE=scratch)
+    for args in (["read-tree", "HEAD"], ["add", "-A"]):
+        subprocess.run(["git", "-C", ROOT] + args, env=env, check=True,
+                       capture_output=True)
+    return subprocess.run(["git", "-C", ROOT, "write-tree"], env=env,
+                          check=True, capture_output=True,
+                          text=True).stdout.strip()
 
 
 def run_once(checkout, workload, seed, seconds):
@@ -206,15 +223,17 @@ def main(argv=None):
     label = args.workload or "bench"
     base_sha = git("rev-parse", "--verify", args.base + "^{commit}")
     head_sha = git("rev-parse", "HEAD")
-    dirty = bool(git("status", "--porcelain", "--untracked-files=no"))
 
     tmp = tempfile.mkdtemp(prefix="perfbench_ab_")
     runs = []
     try:
-        base_dir = os.path.join(tmp, "base")
-        os.makedirs(base_dir)
-        export(base_sha, base_dir)
-        sides = {"base": base_dir, "change": ROOT}
+        change_tree = snapshot(os.path.join(tmp, "index"))
+        dirty = change_tree != git("rev-parse", "HEAD^{tree}")
+        sides = {"base": os.path.join(tmp, "base"),
+                 "change": os.path.join(tmp, "change")}
+        for side, rev in (("base", base_sha), ("change", change_tree)):
+            os.makedirs(sides[side])
+            export(rev, sides[side])
         classpaths = {side: subprocess.run(
             [sys.executable, os.path.join(d, "perfbench", "build.py")],
             cwd=d, check=True, capture_output=True, text=True)
@@ -266,7 +285,8 @@ def main(argv=None):
             "seeds": seeds, "seconds": None if queries else seconds,
             "cores": len(os.sched_getaffinity(0)),
             "base": {"rev": args.base, "commit": base_sha},
-            "change": {"commit": head_sha, "uncommitted_edits": dirty},
+            "change": {"commit": head_sha, "uncommitted_edits": dirty,
+                       "tree": change_tree},
             "all_correct": all(r["correct"] for r in runs),
             "failed": sum(r["failed"] for r in runs),
             "summary": summary, "runs": runs,

@@ -6,34 +6,6 @@ import org.apache.spark.sql.functions._
 /** Exact integer apportionment — the budgeted-stage primitive. */
 object Apportion {
 
-  /** Hamilton (largest-remainder) apportionment: split an integer
-    * `total` across rows proportionally to the non-negative Long
-    * `weightCol`, EXACTLY — Σ quota = total, every quota is
-    * floor(total·w ÷ W) or that plus one, and the +1s go to the
-    * largest remainders (ties broken by `keyCols` ascending, so the
-    * split is deterministic). This is the op every budgeted stage
-    * needs — crawl fetches per domain, sample counts per stratum,
-    * rows per shard — where per-row rounding over- or under-shoots
-    * the budget and this never does.
-    *
-    * All arithmetic is Long (floors/remainders are exact integer
-    * division, identical in every engine); the caller keeps
-    * total · W inside Long — guarded with a loud require. Zero
-    * weights always get quota 0: k = Σrem ÷ W and every remainder is
-    * strictly below W, so k is strictly less than the count of
-    * positive remainders — a +1 never reaches a zero-remainder row.
-    * W = 0 (all weights zero) is rejected loudly.
-    *
-    * Scale shape: one aggregate for (W, min w, Σ floor), floors and
-    * remainders map-side, and the +1 election rides the two-phase
-    * [[Relational.globalRowNumber]] — no single-partition window.
-    * The input is staged once (it feeds both the aggregate and the
-    * ranked projection). Inputs of at most
-    * `spark.graft.driverPath.maxRows` rows with string/integer keys
-    * run the same arithmetic on the collected rows instead
-    * ([[Graph.driverPath]]).
-    *
-    * Output: keyCols ++ (weightCol, quota). */
   /** Epoch-capped apportionment — exact water-filling: split `total`
     * proportionally to `weightCol` like [[largestRemainder]], but no
     * row may receive more than its `capCol` (for a training-data
@@ -66,13 +38,13 @@ object Apportion {
     * total < 2^53 so the double sort key and the decimal products stay
     * exact.
     *
-    * Scale shape: the sort/rank and BOTH running sums ride one fused
-    * two-phase pass ([[rankedPrefix]] — globalRowNumber's
-    * range-partition + driver-offset pattern carrying the prefix sums
-    * alongside the rank; 1 shuffle, 2 jobs) — no single-partition
+    * Scale shape: the sort/rank and BOTH running sums ride one run of
+    * the two-phase prefix kernel ([[Relational.prefixScan]], ungrouped,
+    * weighing each row 1, its cap and its weight; 1 shuffle, 2 jobs,
+    * with the kernel's recompute guard) — no single-partition
     * window, so this holds for per-DOMAIN caps (millions of rows),
     * not just per-source config tables. Driver fetches: the stats
-    * row, the per-partition subtotal array, the stop rank, and the
+    * row, the kernel's run table, the stop rank, and the
     * saturated-cap sum. Inputs of at most
     * `spark.graft.driverPath.maxRows` rows with string/integer keys
     * run the same water-fill on the collected rows instead
@@ -175,8 +147,11 @@ object Apportion {
     }
     val stats = w0.agg(min(col("__w")), max(col("__w")),
       min(col("__c")), max(col("__c")), sum(col("__w")),
-      count(lit(1))).first()
+      count(lit(1)), count(col("__w")), count(col("__c"))).first()
     require(stats.getLong(5) > 0, "cappedLargestRemainder: empty input")
+    require(stats.getLong(6) == stats.getLong(5) &&
+      stats.getLong(7) == stats.getLong(5),
+      "cappedLargestRemainder: null weight or cap")
     require(stats.getLong(0) > 0,
       s"cappedLargestRemainder: weights must be > 0 (min ${
         stats.getLong(0)})")
@@ -194,7 +169,15 @@ object Apportion {
     require(total == 0 || bigW <= Long.MaxValue / total,
       s"cappedLargestRemainder: total * sum(weights) must stay inside " +
         s"Long for the Hamilton suffix (total=$total, W=$bigW)")
-    val cum = graft.core.Tables.staged(rankedPrefix(w0, keyCols),
+    // the rank and both running sums over the ratio order: ONE
+    // ungrouped prefix kernel run (1 shuffle, 2 jobs)
+    val cum = graft.core.Tables.staged(
+      Relational.prefixScan("cappedLargestRemainder", w0, Nil,
+        (col("__c").cast("double") / col("__w").cast("double")).asc +:
+          keyCols.map(col(_).asc), 0,
+        Seq("__rk" -> Relational.EachRow,
+          "__ccap" -> Relational.ValueOf("__c"),
+          "__cw" -> Relational.ValueOf("__w"))),
       "capfill_cum")
     // saturation test on the running remainders, exact in decimal:
     // cap_i · W_i ≤ R_i · w_i with R_i = total − caps already bound,
@@ -233,72 +216,6 @@ object Apportion {
     satPart.unionByName(unsatPart)
       .withColumnRenamed("__w", weightCol)
       .withColumnRenamed("__c", capCol)
-  }
-
-  /** ONE two-phase pass computing the water-fill's global rank AND
-    * both running sums over the ratio order — globalRowNumber's
-    * range-partition + driver-offset pattern extended to carry the
-    * (cap, weight) prefix sums, replacing rank + 2 cumsum passes
-    * (3 shuffles, 6 jobs) with 1 shuffle, 2 jobs. Both jobs run over
-    * the SAME shuffled RDD instance (identical sampled boundaries,
-    * the globalRowNumber contract), and the map pass re-checks each
-    * partition's subtotals against the counting job's — loud failure
-    * over silent corruption (the groupedPrefix discipline).
-    * Input: (keyCols, __w, __c); appends (__rk, __ccap, __cw). */
-  private def rankedPrefix(w0: DataFrame,
-                           keyCols: Seq[String]): DataFrame = {
-    Relational.recordTwoPhase()
-    val spark = w0.sparkSession
-    val schema = w0.schema
-    val sortCols =
-      (col("__c").cast("double") / col("__w").cast("double")).asc +:
-        keyCols.map(col(_).asc)
-    val rdd = w0.repartitionByRange(
-        spark.sessionState.conf.numShufflePartitions, sortCols: _*)
-      .sortWithinPartitions(sortCols: _*)
-      .rdd
-    val cIdx = schema.fieldIndex("__c")
-    val wIdx = schema.fieldIndex("__w")
-    val parts = rdd.mapPartitionsWithIndex { (i, it) =>
-      var n = 0L; var sc = 0L; var sw = 0L
-      it.foreach { r =>
-        n += 1; sc += r.getLong(cIdx); sw += r.getLong(wIdx)
-      }
-      Iterator((i, (n, sc, sw)))
-    }.collect().sortBy(_._1).map(_._2)
-    val offs = parts.scanLeft((0L, 0L, 0L)) {
-      case ((n, c, w), (n2, c2, w2)) => (n + n2, c + c2, w + w2)
-    }
-    val bc = spark.sparkContext.broadcast((offs, parts))
-    val out = rdd.mapPartitionsWithIndex { (i, it) =>
-      val (offsets, totals) = bc.value
-      var (n, cc, cw) = offsets(i)
-      var rn = 0L; var rc = 0L; var rw = 0L
-      new scala.collection.AbstractIterator[org.apache.spark.sql.Row] {
-        def hasNext: Boolean = {
-          val h = it.hasNext
-          if (!h && i < totals.length) {
-            val t = totals(i)
-            if (t != ((rn, rc, rw))) sys.error(
-              s"rankedPrefix: partition $i subtotal ($rn, $rc, $rw) " +
-                s"!= counting job's $t — upstream recomputed " +
-                "nondeterministically")
-          }
-          h
-        }
-        def next(): org.apache.spark.sql.Row = {
-          val r = it.next()
-          val c = r.getLong(cIdx); val w = r.getLong(wIdx)
-          n += 1; cc += c; cw += w; rn += 1; rc += c; rw += w
-          org.apache.spark.sql.Row.fromSeq(r.toSeq ++ Seq(n, cc, cw))
-        }
-      }
-    }
-    import org.apache.spark.sql.types.LongType
-    spark.createDataFrame(out, schema
-      .add("__rk", LongType, nullable = false)
-      .add("__ccap", LongType, nullable = false)
-      .add("__cw", LongType, nullable = false))
   }
 
   /** Null-first ascending compare in Spark's own ordering (asc =
@@ -354,6 +271,35 @@ object Apportion {
     quota
   }
 
+  /** Hamilton (largest-remainder) apportionment: split an integer
+    * `total` across rows proportionally to the non-negative Long
+    * `weightCol`, EXACTLY — Σ quota = total, every quota is
+    * floor(total·w ÷ W) or that plus one, and the +1s go to the
+    * largest remainders (ties broken by `keyCols` ascending, so the
+    * split is deterministic). This is the op every budgeted stage
+    * needs — crawl fetches per domain, sample counts per stratum,
+    * rows per shard — where per-row rounding over- or under-shoots
+    * the budget and this never does.
+    *
+    * All arithmetic is Long (floors/remainders are exact integer
+    * division, identical in every engine); the caller keeps
+    * total · W inside Long — guarded with a loud require. Zero
+    * weights always get quota 0: k = Σrem ÷ W and every remainder is
+    * strictly below W, so k is strictly less than the count of
+    * positive remainders — a +1 never reaches a zero-remainder row.
+    * W = 0 (all weights zero) is rejected loudly.
+    *
+    * Scale shape: one aggregate for (W, min w, Σ floor), floors and
+    * remainders map-side, and the +1 election rides the two-phase
+    * [[Relational.globalRowNumber]] (the prefix kernel) — no
+    * single-partition window.
+    * The input is staged once (it feeds both the aggregate and the
+    * ranked projection). Inputs of at most
+    * `spark.graft.driverPath.maxRows` rows with string/integer keys
+    * run the same arithmetic on the collected rows instead
+    * ([[Graph.driverPath]]).
+    *
+    * Output: keyCols ++ (weightCol, quota). */
   def largestRemainder(df: DataFrame, keyCols: Seq[String],
                        weightCol: String, total: Long): DataFrame = {
     require(total >= 0, s"total must be >= 0: $total")

@@ -1,8 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.GenericRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.agg.Aggregators
 import graft.functions.Functions._
@@ -12,21 +14,14 @@ object Relational {
 
   private val twoPhase = new java.util.concurrent.atomic.AtomicLong(0)
 
-  /** Monotone count of two-phase prefix-kernel invocations
-    * ([[globalRowNumber]] / [[surrogateKeysDistributed]] / the grouped
-    * prefix machinery) since JVM start. Each invocation runs TWO jobs
-    * over one shuffled RDD (subtotal-count + offset-map) — the
-    * many-small-disk-jobs shape whose warm timings spread ~2× under
-    * disk weather. Bench reads the delta across a query's cold pass to
-    * classify the 5-pass-median set by construction (with
-    * [[graft.core.Tables.stagedWriteCount]]). */
+  /** Monotone count of prefix-kernel runs since JVM start: one per
+    * two-phase call of [[globalRowNumber]], [[groupedRowNumber]],
+    * [[groupedCumSum]], [[surrogateKeysOrdered]] or
+    * [[Apportion.cappedLargestRemainder]], each a counting job plus an
+    * emitting job over one range-shuffled RDD. Bench charges two
+    * disk-bound jobs per run to `queries_warm_staged`; perfbench reports
+    * the delta per operation as `core.two_phase_runs`. */
   def twoPhaseRunCount: Long = twoPhase.get
-
-  /** Record a two-phase kernel run implemented outside this object
-    * (e.g. [[Apportion]]'s fused rank+prefix pass). */
-  private[graft] def recordTwoPhase(): Unit = {
-    twoPhase.incrementAndGet(); ()
-  }
 
   /** Full-outer stg ⊕ ods merge with `or-tuple` coalesce — SCD-0 upsert
     * preserving ods surrogate ids (reference
@@ -127,12 +122,6 @@ object Relational {
       .drop("dt_kv")
   }
 
-  /** Group-max over partition (m_cocacola_score_overall.clj:53): max of
-    * the collected map's values ≡ MAX(value) OVER (PARTITION BY group).
-    * NOTE: compares in the map's value type — for decimal-string maps
-    * cast first (slidingScores does this for its `max_value`). */
-  def groupMax(valueMap: Column): Column = array_max(map_values(valueMap))
-
   /** `row-num` surrogate-key assignment, window form (reference
     * trgx.clj:166-186 + load-max-dw-id): rows keep an existing id;
     * new rows get maxExisting + rank over a deterministic order.
@@ -172,60 +161,17 @@ object Relational {
       .drop("__prt", "__rk")
   }
 
-  /** Scale-path surrogate keys: two-phase zipWithIndex (per-partition
-    * counts → cumulative offsets → local index), no global sort, no
-    * single-partition window. Dense, gap-free ids continuing from
-    * `maxExisting`. */
-  def surrogateKeysDistributed(df: DataFrame, idCol: String,
-                               maxExisting: Long): DataFrame = {
-    twoPhase.incrementAndGet()
-    val spark = df.sparkSession
-    // widen existing ids up front: the output schema declares LongType,
-    // and a pre-existing java.lang.Integer passing through the `else r`
-    // branch below would fail createDataFrame's runtime conversion
-    // (the window-form surrogateKeys coerces via SQL; this path must
-    // match it)
-    val widened = df.withColumn(idCol, col(idCol).cast("long"))
-    val schema = widened.schema
-    val idIdx = schema.fieldIndex(idCol)
-    val rdd = widened.rdd
-    val counts = rdd.mapPartitionsWithIndex { (i, it) =>
-      // Long accumulator, not it.count (Int) — partitions can exceed
-      // 2^31 rows at scale and a wrapped count corrupts every offset
-      var n = 0L
-      it.foreach(r => if (r.isNullAt(idIdx)) n += 1)
-      Iterator((i, n))
-    }.collect().sortBy(_._1)
-    val offsets = counts.map(_._2).scanLeft(0L)(_ + _)
-    val bc = spark.sparkContext.broadcast(offsets)
-    val out = rdd.mapPartitionsWithIndex { (i, it) =>
-      var next = maxExisting + bc.value(i)
-      it.map { r =>
-        if (r.isNullAt(idIdx)) {
-          next += 1
-          org.apache.spark.sql.Row.fromSeq(
-            r.toSeq.updated(idIdx, next))
-        } else r
-      }
-    }
-    spark.createDataFrame(out,
-      org.apache.spark.sql.types.StructType(schema.map(f =>
-        if (f.name == idCol) f.copy(dataType =
-          org.apache.spark.sql.types.LongType, nullable = false) else f)))
-  }
-
   /** The registered scale path for surrogate keys: ids assigned to
     * null-id rows in `orderCol` order, dense and gap-free from
-    * `maxExisting`, with NO single-partition window. Range-repartition
-    * by `orderCol` gives a global order across partition indexes
-    * (RangePartitioner's partition 0 holds the lowest range), then the
-    * two-phase per-partition count/offset assignment runs fully
-    * parallel. Matches the window form's id sequence whenever
-    * `orderCol` is a total order — at any width, since the assignment
-    * is dense in `orderCol` order. The numbering stage runs at
-    * `spark.sql.shuffle.partitions` unless `nPartitions` > 0 pins it
-    * (see [[resolvePartitions]]); a caller that writes the result
-    * straight out gets one file per numbering task.
+    * `maxExisting`, with NO single-partition window. The two-phase path
+    * is one [[prefixScan]] over `orderCol` weighing each null-id row 1:
+    * `id = coalesce(id, maxExisting + prefix)`. Matches the window
+    * form's id sequence whenever `orderCol` is a total order — at any
+    * width, since the assignment is dense in `orderCol` order. The
+    * numbering stage runs at `spark.sql.shuffle.partitions` unless
+    * `nPartitions` > 0 pins it (see [[resolvePartitions]]); a caller
+    * that writes the result straight out gets one file per numbering
+    * task.
     *
     * `newRowsAtMost`: a caller-known upper bound on the null-id rows
     * (an ODS merge knows its stg row count). When [[Graph.driverPath]]
@@ -237,7 +183,8 @@ object Relational {
     * is coalesced to the session's shuffle width so a caller writing
     * it out gets at most that many files. Both paths give the same ids
     * whenever `orderCol` is a total order. Without a bound, or above
-    * the limit, the two-phase path runs. */
+    * the limit, the two-phase path runs. Ids come out LongType, an
+    * IntegerType `idCol` widened. */
   def surrogateKeysOrdered(df: DataFrame, idCol: String, orderCol: String,
                            maxExisting: Long,
                            nPartitions: Int = 0,
@@ -251,11 +198,11 @@ object Relational {
         .union(numbered)
         .coalesce(resolvePartitions(df, 0))
     } else
-      surrogateKeysDistributed(
-        df.repartitionByRange(resolvePartitions(df, nPartitions),
-            col(orderCol))
-          .sortWithinPartitions(orderCol),
-        idCol, maxExisting)
+      prefixScan("surrogateKeysOrdered", df, Nil, Seq(col(orderCol)),
+          nPartitions, Seq("__new_rank" -> NullIn(idCol)))
+        .withColumn(idCol, coalesce(col(idCol).cast("long"),
+          lit(maxExisting) + col("__new_rank")))
+        .drop("__new_rank")
 
   /** nPartitions ≤ 0 (the default everywhere) resolves to the
     * session's shuffle-partition setting, so the two-phase helpers'
@@ -269,194 +216,235 @@ object Relational {
     if (n > 0) n
     else df.sparkSession.sessionState.conf.numShufflePartitions
 
-  /** Global row_number over a total order without a single-partition
-    * window: range-repartition on the sort keys (global order across
-    * partition indexes), then two-phase per-partition offsets — a count
-    * job plus a map job over the same shuffled RDD (the RangePartitioner
-    * is sampled once per RDD instance, so both jobs see identical
-    * boundaries). Emits LongType `outCol` starting at 1; the width
-    * follows [[resolvePartitions]]. */
-  def globalRowNumber(df: DataFrame, sortCols: Seq[Column],
-                      outCol: String, nPartitions: Int = 0): DataFrame = {
-    twoPhase.incrementAndGet()
-    val spark = df.sparkSession
-    val schema = df.schema
-    val rdd = df.repartitionByRange(
-        resolvePartitions(df, nPartitions), sortCols: _*)
-      .sortWithinPartitions(sortCols: _*)
-      .rdd
-    val counts = rdd.mapPartitionsWithIndex { (i, it) =>
-      // Long accumulator, not it.size (Int) — see surrogateKeysDistributed
-      var n = 0L
-      it.foreach(_ => n += 1)
-      Iterator((i, n))
-    }.collect().sortBy(_._1)
-    val offsets = counts.map(_._2).scanLeft(0L)(_ + _)
-    val bc = spark.sparkContext.broadcast(offsets)
-    val out = rdd.mapPartitionsWithIndex { (i, it) =>
-      var n = bc.value(i)
-      it.map { r =>
-        n += 1
-        org.apache.spark.sql.Row.fromSeq(r.toSeq :+ n)
+  /** A Long weight the prefix kernel sums per row, read inside its
+    * partition iterators from an existing column of the input. */
+  private[graft] sealed trait Weight extends Serializable
+  /** 1 per row: the prefix is the row number. */
+  private[graft] case object EachRow extends Weight
+  /** The LongType column `c` under SQL null-frame semantics: a null
+    * adds nothing, and the prefix is null until the frame holds a
+    * non-null value. */
+  private[graft] final case class ValueOf(c: String) extends Weight
+  /** 1 per row whose `c` is null (the rows still to be numbered). */
+  private[graft] final case class NullIn(c: String) extends Weight
+
+  /** One (partition, group) run as the counting job recorded it, the
+    * prefix its first row starts from (the group's runs in earlier
+    * partitions) and the group's total. Each is [rows, then per weight:
+    * sum, contributing rows]. */
+  private[graft] final class Run(val recorded: Array[Long],
+      val before: Array[Long], val total: Array[Long]) extends Serializable
+
+  /** The counting job's runs keyed by (partition, group), and how many
+    * groups each partition held. O(groups + partitions) entries: groups
+    * are range-contiguous, so a partition boundary adds at most one
+    * run. */
+  private[graft] final case class RunTable(
+      runs: Map[(Int, List[Any]), Run], groupsIn: Map[Int, Int])
+
+  /** The prefix kernel's two partition passes over rows of `schema`
+    * arriving sorted by (`groupCols` ++ sort keys). `count` reduces a
+    * partition to its per-group runs, `table` turns the collected runs
+    * into offsets and totals, and `emit` appends each row's inclusive
+    * prefix per `prefixes` weight and its group total per `totals`
+    * weight (LongType, nullable only for [[ValueOf]]). `emit` re-checks
+    * every run against the table and fails, naming `op`, the partition
+    * and the group, when the two jobs saw different rows — an upstream
+    * that recomputed nondeterministically between them. */
+  private[graft] final class PrefixScan(op: String, schema: StructType,
+      groupCols: Seq[String], prefixes: Seq[(String, Weight)],
+      totals: Seq[(String, Weight)] = Nil) extends Serializable {
+    private val gIdx = groupCols.map(schema.fieldIndex).toArray
+    private val weights = (prefixes ++ totals).map(_._2).distinct.toArray
+    private val wIdx = weights.map {
+      case EachRow => -1
+      case ValueOf(c) =>
+        require(schema(c).dataType == LongType,
+          s"$op: weight column $c must be LongType")
+        schema.fieldIndex(c)
+      case NullIn(c) => schema.fieldIndex(c)
+    }
+    private val width = 1 + 2 * weights.length
+    private val outSlots = (prefixes.map(p => (false, p._2)) ++
+      totals.map(t => (true, t._2)))
+      .map { case (tot, w) => (tot, weights.indexOf(w)) }.toArray
+
+    val outSchema: StructType = StructType(schema ++
+      (prefixes ++ totals).map { case (name, w) =>
+        StructField(name, LongType, nullable = w.isInstanceOf[ValueOf])
+      })
+
+    // the ungrouped path builds no per-row key
+    private def key(r: Row): List[Any] =
+      if (gIdx.isEmpty) Nil else gIdx.iterator.map(r.get).toList
+
+    private def add(acc: Array[Long], r: Row): Unit = {
+      def bump(j: Int, w: Long): Unit = {
+        acc(1 + 2 * j) += w; acc(2 + 2 * j) += 1L
+      }
+      acc(0) += 1L
+      var j = 0
+      while (j < weights.length) {
+        val x = wIdx(j)
+        weights(j) match {
+          case EachRow => bump(j, 1L)
+          case ValueOf(_) => if (!r.isNullAt(x)) bump(j, r.getLong(x))
+          case NullIn(_) => if (r.isNullAt(x)) bump(j, 1L)
+        }
+        j += 1
       }
     }
-    spark.createDataFrame(out, org.apache.spark.sql.types.StructType(
-      schema.add(outCol, org.apache.spark.sql.types.LongType,
-        nullable = false)))
+
+    private def fmt(k: List[Any]): String = k.mkString("[", ", ", "]")
+
+    private def fail(i: Int, k: List[Any], what: String): Nothing =
+      sys.error(s"$op: partition $i group ${fmt(k)} $what — upstream " +
+        "recomputed nondeterministically between the counting and " +
+        "emitting jobs")
+
+    def count(i: Int, it: Iterator[Row])
+        : Iterator[(Int, List[Any], Array[Long])] = {
+      val runs = scala.collection.mutable.ArrayBuffer
+        .empty[(Int, List[Any], Array[Long])]
+      it.foreach { r =>
+        val k = key(r)
+        if (runs.isEmpty || k != runs.last._2)
+          runs += ((i, k, new Array[Long](width)))
+        add(runs.last._3, r)
+      }
+      runs.iterator
+    }
+
+    def table(counted: Array[(Int, List[Any], Array[Long])]): RunTable = {
+      def plus(a: Array[Long], b: Array[Long]) =
+        Array.tabulate(width)(j => a(j) + b(j))
+      val runs = counted.groupBy(_._2).valuesIterator.flatMap { rs =>
+        val sorted = rs.sortBy(_._1)
+        val total = sorted.map(_._3).reduce(plus)
+        val before = sorted.iterator.map(_._3)
+          .scanLeft(new Array[Long](width))(plus)
+        sorted.iterator.zip(before).map { case ((i, k, rec), b) =>
+          (i, k) -> new Run(rec, b, total)
+        }
+      }.toMap
+      RunTable(runs, counted.groupBy(_._1).map { case (i, rs) =>
+        (i, rs.length) })
+    }
+
+    def emit(table: RunTable, i: Int, it: Iterator[Row]): Iterator[Row] =
+      new scala.collection.AbstractIterator[Row] {
+        private val n = schema.length
+        private val seen = new Array[Long](width)
+        private val met = scala.collection.mutable.Set.empty[List[Any]]
+        private var cur: List[Any] = null
+        private var run: Run = null
+        private var closed = false
+
+        private def check(): Unit =
+          if (run != null && !java.util.Arrays.equals(seen, run.recorded))
+            fail(i, cur, s"has [rows, (sum, count) per weight] " +
+              s"${seen.mkString(", ")} but the counting job recorded " +
+              run.recorded.mkString(", "))
+
+        def hasNext: Boolean = {
+          val h = it.hasNext
+          if (!h && !closed) {
+            closed = true
+            check()
+            if (met.size != table.groupsIn.getOrElse(i, 0))
+              fail(i, table.runs.keys.collectFirst {
+                case (`i`, g) if !met(g) => g
+              }.get, "was recorded by the counting job but never met")
+          }
+          h
+        }
+
+        def next(): Row = {
+          val r = it.next()
+          val k = key(r)
+          if (run == null || k != cur) {
+            check()
+            run = table.runs.getOrElse((i, k),
+              fail(i, k, "was not recorded by the counting job"))
+            cur = k; met += k
+            java.util.Arrays.fill(seen, 0L)
+          }
+          add(seen, r)
+          val out = new Array[Any](n + outSlots.length)
+          var c = 0
+          while (c < n) { out(c) = r.get(c); c += 1 }
+          while (c < out.length) {
+            val (tot, j) = outSlots(c - n)
+            val s = 1 + 2 * j
+            val sum = if (tot) run.total(s) else run.before(s) + seen(s)
+            val cnt =
+              if (tot) run.total(s + 1) else run.before(s + 1) + seen(s + 1)
+            out(c) = if (cnt == 0L && weights(j).isInstanceOf[ValueOf]) null
+              else sum
+            c += 1
+          }
+          new GenericRow(out)
+        }
+      }
   }
 
-  /** Shared two-phase machinery for [[groupedRowNumber]] and
-    * [[groupedCumSum]] — a per-GROUP prefix (rank / running sum) over a
-    * total order with NO per-group single-task window. `PARTITION BY
-    * grp ORDER BY ...` funnels each group through one task, which at
-    * 100 TB serializes the dominant group (English is 40-60% of a web
-    * corpus; CommonCrawl is >90% of a typical source mix). Here the
-    * range partitioner keys on (groupCols ++ sortCols), so a dominant
-    * group SPANS many partitions — the sort keys extend the range key —
-    * then one counting job computes each partition's per-group weight
-    * subtotal and the driver turns the contiguous runs into
-    * (partition, group) start offsets plus per-group totals. Driver /
-    * broadcast state is O(nGroups + nPartitions) entries (groups are
-    * range-contiguous, so each partition boundary adds at most one
-    * run), never O(rows). Both jobs run over the same shuffled RDD
-    * instance, so the sampled range boundaries are identical (the
-    * globalRowNumber contract).
-    *
-    * `weightCol = None` weighs every row 1 (rank); `Some(c)` weighs by
-    * the LongType column `c` (running sum; a null weight adds 0, and
-    * the per-(partition, group) NON-NULL weight counts are tracked
-    * alongside so [[groupedCumSum]] can reproduce SQL frame semantics
-    * — `sum() OVER` is NULL until the frame holds a non-null value). */
-  private def groupedPrefix(df: DataFrame, groupCols: Seq[String],
-      sortCols: Seq[Column], nPartitions: Int, weightCol: Option[String])
-      : (org.apache.spark.rdd.RDD[org.apache.spark.sql.Row],
-         org.apache.spark.sql.types.StructType, Array[Int],
-         Map[(Int, List[Any]), (Long, Long)], Map[List[Any], Long],
-         Map[(Int, List[Any]), (Long, Long)]) = {
+  /** The two-phase prefix kernel behind every scale-safe rank, running
+    * sum and numbering here and in [[Apportion]] — a per-group prefix
+    * over a total order with no single-task window. `PARTITION BY grp
+    * ORDER BY ...` funnels each group through one task, which at 100 TB
+    * serializes the dominant group (English is 40-60% of a web corpus;
+    * CommonCrawl is >90% of a typical source mix). Here the range
+    * partitioner keys on (`groupCols` ++ `sortCols`), so a dominant
+    * group SPANS many partitions; one counting job records each
+    * partition's per-group runs, the driver turns them into
+    * (partition, group) offsets and group totals, and one emitting job
+    * over the SAME shuffled RDD instance appends the prefixes (the
+    * RangePartitioner is sampled once per RDD instance, so both jobs
+    * see identical boundaries). With no `groupCols` it is the global
+    * row number / running sum. The width follows [[resolvePartitions]];
+    * see [[PrefixScan]] for the weights, outputs and the recompute
+    * guard. */
+  private[ops] def prefixScan(op: String, df: DataFrame,
+      groupCols: Seq[String], sortCols: Seq[Column], nPartitions: Int,
+      prefixes: Seq[(String, Weight)],
+      totals: Seq[(String, Weight)] = Nil): DataFrame = {
     twoPhase.incrementAndGet()
-    val schema = df.schema
-    val gIdx = groupCols.map(schema.fieldIndex).toArray
-    val wIdx = weightCol.map { c =>
-      require(schema(c).dataType ==
-        org.apache.spark.sql.types.LongType,
-        s"groupedPrefix weight column $c must be LongType")
-      schema.fieldIndex(c)
-    }
+    val spark = df.sparkSession
+    val scan = new PrefixScan(op, df.schema, groupCols, prefixes, totals)
     val keys = groupCols.map(col) ++ sortCols
-    val rdd = df.repartitionByRange(nPartitions, keys: _*)
+    val rdd = df.repartitionByRange(resolvePartitions(df, nPartitions),
+        keys: _*)
       .sortWithinPartitions(keys: _*)
       .rdd
-    val runs = rdd.mapPartitionsWithIndex { (i, it) =>
-      // rows arrive group-contiguous: per-group subtotals are runs —
-      // O(groups-in-partition) output per partition, never O(rows)
-      val acc = scala.collection.mutable.ArrayBuffer
-        .empty[(List[Any], Long, Long)]
-      var cur: List[Any] = null
-      var sum = 0L
-      var nn = 0L
-      var any = false
-      it.foreach { r =>
-        val k = gIdx.map(j => r.get(j)).toList
-        if (!any || k != cur) {
-          if (any) acc += ((cur, sum, nn))
-          cur = k; sum = 0L; nn = 0L; any = true
-        }
-        wIdx match {
-          case Some(j) =>
-            if (!r.isNullAt(j)) { sum += r.getLong(j); nn += 1L }
-          case None => sum += 1L; nn += 1L
-        }
-      }
-      if (any) acc += ((cur, sum, nn))
-      acc.iterator.map { case (k, s, n) => (i, k, s, n) }
-    }.collect()
-    val runMap = runs.map { case (i, k, s, n) => ((i, k), (s, n)) }.toMap
-    val byGroup = runs.groupBy(_._2)
-    // (partition, group) → (weight prefix, non-null-count prefix):
-    // both the running start offset for this partition's first row of
-    // the group, computed from the earlier partitions' subtotals
-    val offsets = byGroup.iterator.flatMap { case (g, rs) =>
-      val sorted = rs.sortBy(_._1)
-      val starts = sorted.scanLeft((0L, 0L)) { case ((s, n), r) =>
-        (s + r._3, n + r._4)
-      }.init
-      sorted.zip(starts).map { case ((p, _, _, _), off) => ((p, g), off) }
-    }.toMap
-    val totals = byGroup.map { case (g, rs) => (g, rs.map(_._3).sum) }
-    (rdd, schema, gIdx, offsets, totals, runMap)
+    val bc = spark.sparkContext.broadcast(
+      scan.table(rdd.mapPartitionsWithIndex(scan.count).collect()))
+    spark.createDataFrame(
+      rdd.mapPartitionsWithIndex((i, it) => scan.emit(bc.value, i, it)),
+      scan.outSchema)
   }
+
+  /** Global row_number over a total order without a single-partition
+    * window: the ungrouped [[prefixScan]]. Emits LongType `outCol`
+    * starting at 1. */
+  def globalRowNumber(df: DataFrame, sortCols: Seq[Column],
+                      outCol: String, nPartitions: Int = 0): DataFrame =
+    prefixScan("globalRowNumber", df, Nil, sortCols, nPartitions,
+      Seq(outCol -> EachRow))
 
   /** Per-group global row number + group size over a total order —
     * the scale-safe replacement for `row_number()/ntile() OVER
     * (PARTITION BY group ORDER BY ...)` when one group can dominate
-    * the corpus (see [[groupedPrefix]] for the plan shape). Appends
+    * the corpus (see [[prefixScan]] for the plan shape). Appends
     * LongType `rankCol` (1-based within group, in `sortCols` order)
     * and `totalCol` (group row count); `ntile(k)` is then the pure
-    * projection `(rank - 1) * k DIV total + 1` — byte-identical to the
-    * window form whenever (groupCols ++ sortCols) is a total order. */
+    * projection [[ntileFromRank]] — byte-identical to the window form
+    * whenever (groupCols ++ sortCols) is a total order. */
   def groupedRowNumber(df: DataFrame, groupCols: Seq[String],
                        sortCols: Seq[Column], rankCol: String,
                        totalCol: String,
-                       nPartitions: Int = 0): DataFrame = {
-    val spark = df.sparkSession
-    val (rdd, schema, gIdx, offsets, totals, runMap) =
-      groupedPrefix(df, groupCols, sortCols,
-        resolvePartitions(df, nPartitions), None)
-    val bcOff = spark.sparkContext.broadcast(offsets)
-    val bcTot = spark.sparkContext.broadcast(totals)
-    val bcRuns = spark.sparkContext.broadcast(runMap)
-    val out = rdd.mapPartitionsWithIndex { (i, it) =>
-      new scala.collection.AbstractIterator[org.apache.spark.sql.Row] {
-        private var cur: List[Any] = null
-        private var any = false
-        private var n = 0L
-        private var runRows = 0L
-        private var tailChecked = false
-        // a run whose ROW COUNT differs from what the counting job
-        // recorded means the two jobs saw different row placements
-        // even though the group SET matched (the subtle
-        // nondeterministic-recompute case the unrecorded-group guard
-        // below cannot see) — fail loudly, never emit corrupt ranks
-        private def verifyRun(): Unit = if (any) {
-          val rec = bcRuns.value((i, cur))._1
-          if (rec != runRows) sys.error(
-            s"groupedRowNumber: partition $i group $cur has $runRows " +
-              s"rows but the counting job recorded $rec — upstream " +
-              "recomputed nondeterministically")
-        }
-        def hasNext: Boolean = {
-          val h = it.hasNext
-          if (!h && !tailChecked) { tailChecked = true; verifyRun() }
-          h
-        }
-        def next(): org.apache.spark.sql.Row = {
-          val r = it.next()
-          val k = gIdx.map(j => r.get(j)).toList
-          if (!any || k != cur) {
-            verifyRun()
-            // a missing key means the counting job and this job saw
-            // DIFFERENT partitionings (nondeterministic upstream
-            // recompute after shuffle eviction) — fail loudly rather
-            // than emit silently corrupt ranks
-            n = bcOff.value.getOrElse((i, k), sys.error(
-              s"groupedRowNumber: partition $i saw unrecorded group " +
-                s"$k — upstream recomputed nondeterministically"))._1
-            cur = k; any = true; runRows = 0L
-          }
-          n += 1
-          runRows += 1
-          org.apache.spark.sql.Row.fromSeq(
-            r.toSeq :+ n :+ bcTot.value(k))
-        }
-      }
-    }
-    spark.createDataFrame(out, org.apache.spark.sql.types.StructType(
-      schema
-        .add(rankCol, org.apache.spark.sql.types.LongType,
-          nullable = false)
-        .add(totalCol, org.apache.spark.sql.types.LongType,
-          nullable = false)))
-  }
+                       nPartitions: Int = 0): DataFrame =
+    prefixScan("groupedRowNumber", df, groupCols, sortCols, nPartitions,
+      Seq(rankCol -> EachRow), Seq(totalCol -> EachRow))
 
   /** SQL `ntile(k)` recovered from a grouped rank and group size: the
     * first (n mod k) buckets get ceil(n/k) rows, the rest floor(n/k) —
@@ -483,72 +471,19 @@ object Relational {
 
   /** Per-group running sum (inclusive of the current row) over a total
     * order — the scale-safe replacement for `sum(v) OVER (PARTITION BY
-    * group ORDER BY ... ROWS UNBOUNDED PRECEDING)` (see
-    * [[groupedPrefix]] for why and for the plan shape). `valueCol`
-    * must be LongType. SQL frame semantics EXACTLY, nulls included:
-    * the running sum is NULL until the frame holds at least one
-    * non-null value (an all-null group yields all-NULL sums — the
-    * review-caught case where "null weighs 0" diverged from the
-    * window form), and a null value after that leaves the sum
-    * unchanged. Appends nullable LongType `outCol`. */
+    * group ORDER BY ... ROWS UNBOUNDED PRECEDING)` (see [[prefixScan]]
+    * for why and for the plan shape). `valueCol` must be LongType. SQL
+    * frame semantics EXACTLY, nulls included: the running sum is NULL
+    * until the frame holds at least one non-null value (an all-null
+    * group yields all-NULL sums — the case where "null weighs 0"
+    * diverged from the window form), and a null value after
+    * that leaves the sum unchanged. Appends nullable LongType
+    * `outCol`. */
   def groupedCumSum(df: DataFrame, groupCols: Seq[String],
                     sortCols: Seq[Column], valueCol: String,
-                    outCol: String, nPartitions: Int = 0): DataFrame = {
-    val spark = df.sparkSession
-    val (rdd, schema, gIdx, offsets, _, runMap) =
-      groupedPrefix(df, groupCols, sortCols,
-        resolvePartitions(df, nPartitions), Some(valueCol))
-    val vIdx = schema.fieldIndex(valueCol)
-    val bcOff = spark.sparkContext.broadcast(offsets)
-    val bcRuns = spark.sparkContext.broadcast(runMap)
-    val out = rdd.mapPartitionsWithIndex { (i, it) =>
-      new scala.collection.AbstractIterator[org.apache.spark.sql.Row] {
-        private var cur: List[Any] = null
-        private var any = false
-        private var n = 0L
-        private var nn = 0L
-        private var runSum = 0L
-        private var runNn = 0L
-        private var tailChecked = false
-        // subtotal re-check — see groupedRowNumber.verifyRun
-        private def verifyRun(): Unit = if (any) {
-          val rec = bcRuns.value((i, cur))
-          if (rec._1 != runSum || rec._2 != runNn) sys.error(
-            s"groupedCumSum: partition $i group $cur run subtotal " +
-              s"($runSum, $runNn) != counting job's $rec — upstream " +
-              "recomputed nondeterministically")
-        }
-        def hasNext: Boolean = {
-          val h = it.hasNext
-          if (!h && !tailChecked) { tailChecked = true; verifyRun() }
-          h
-        }
-        def next(): org.apache.spark.sql.Row = {
-          val r = it.next()
-          val k = gIdx.map(j => r.get(j)).toList
-          if (!any || k != cur) {
-            verifyRun()
-            // loud failure over silent corruption — groupedRowNumber
-            val off = bcOff.value.getOrElse((i, k), sys.error(
-              s"groupedCumSum: partition $i saw unrecorded group $k — " +
-                "upstream recomputed nondeterministically"))
-            n = off._1; nn = off._2
-            cur = k; any = true; runSum = 0L; runNn = 0L
-          }
-          if (!r.isNullAt(vIdx)) {
-            val v = r.getLong(vIdx)
-            n += v; nn += 1L; runSum += v; runNn += 1L
-          }
-          org.apache.spark.sql.Row.fromSeq(
-            r.toSeq :+
-              (if (nn == 0L) null else java.lang.Long.valueOf(n)))
-        }
-      }
-    }
-    spark.createDataFrame(out, org.apache.spark.sql.types.StructType(
-      schema.add(outCol, org.apache.spark.sql.types.LongType,
-        nullable = true)))
-  }
+                    outCol: String, nPartitions: Int = 0): DataFrame =
+    prefixScan("groupedCumSum", df, groupCols, sortCols, nPartitions,
+      Seq(outCol -> ValueOf(valueCol)))
 
   /** Ordered-funnel completion per key: stage 1 completes at its
     * earliest event; stage n at its earliest event STRICTLY AFTER

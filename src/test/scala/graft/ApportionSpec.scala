@@ -115,6 +115,13 @@ class ApportionSpec extends AnyFunSuite {
           "id AS wt", "id AS cap"),
         Seq("k"), "wt", "cap", 10L)
     }
+    // a null weight falls through the driver path; the staged path
+    // refuses it before the prefix kernel runs
+    intercept[IllegalArgumentException] {
+      Apportion.cappedLargestRemainder(Seq(("a", Some(2L), 5L),
+          ("b", None, 5L)).toDF("k", "wt", "cap"),
+        Seq("k"), "wt", "cap", 10L)
+    }
   }
 
   test("largestRemainder fails loudly on zero mass, negative weights, " +

@@ -60,18 +60,6 @@ class RelationalSpec extends AnyFunSuite {
     assert(out == Map(10L -> 10L, 11L -> 11L, 12L -> 3L, 13L -> 12L))
   }
 
-  test("surrogateKeysDistributed: dense ids, no single-partition funnel") {
-    val df = spark.range(0, 1000, 1, 8)
-      .select($"id".as("k"),
-        when($"id" % 3 === 0, $"id" + 5000).cast("long").as("dw_id"))
-    val out = Relational.surrogateKeysDistributed(df, "dw_id", 9000L)
-    val ids = out.select("dw_id").as[Long].collect()
-    assert(ids.distinct.length == 1000)          // unique
-    val newIds = ids.filter(_ > 9000).sorted     // dense from max+1
-    assert(newIds.head == 9001L &&
-      newIds.last == 9000L + newIds.length)
-  }
-
   test("surrogateKeysOrdered matches the orderCol-window reference " +
        "sequence") {
     import org.apache.spark.sql.expressions.Window
@@ -88,6 +76,28 @@ class RelationalSpec extends AnyFunSuite {
           Window.partitionBy($"dw_id".isNull).orderBy($"k"))))
       .select($"k", $"dw_id").as[(Long, Long)].collect().toMap
     assert(out == ref)
+    // every third row carries an id: the new ids are unique and dense
+    // from max + 1, with no single-partition funnel
+    val third = spark.range(0, 1000, 1, 8)
+      .select($"id".as("k"),
+        when($"id" % 3 === 0, $"id" + 5000).cast("long").as("dw_id"))
+    val ids = Relational.surrogateKeysOrdered(third, "dw_id", "k", 9000L,
+        nPartitions = 8)
+      .select("dw_id").as[Long].collect()
+    assert(ids.distinct.length == 1000)
+    val newIds = ids.filter(_ > 9000).sorted
+    assert(newIds.toSeq == (9001L to 9000L + 666L))
+    // an IntegerType id column comes out LongType, existing ids kept
+    val ints = third.withColumn("dw_id", $"dw_id".cast("int"))
+    val widened = Relational.surrogateKeysOrdered(ints, "dw_id", "k",
+        9000L, nPartitions = 8)
+    assert(widened.schema("dw_id").dataType ==
+      org.apache.spark.sql.types.LongType)
+    assert(widened.select($"k", $"dw_id").as[(Long, Long)].collect()
+      .toMap == third.select($"k", coalesce($"dw_id", lit(9000L) +
+        org.apache.spark.sql.functions.row_number().over(
+          Window.partitionBy($"dw_id".isNull).orderBy($"k"))).as("dw_id"))
+      .as[(Long, Long)].collect().toMap)
   }
 
   test("globalRowNumber equals a global window row_number, without a " +
@@ -204,6 +214,51 @@ class RelationalSpec extends AnyFunSuite {
     assert(got == refNull)
     assert(got(("b", 1L)).isEmpty && got(("b", 2L)).isEmpty)
     assert(got(("a", 2L)).contains(3L) && got(("a", 3L)).contains(7L))
+  }
+
+  test("prefix kernel: the emit pass fails loudly, naming the operator, " +
+       "partition and group, when its rows differ from the counted ones") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import Relational.{EachRow, NullIn, PrefixScan, ValueOf}
+    val schema = StructType(Seq(StructField("g", StringType),
+      StructField("v", LongType)))
+    // the counting job saw `counted` in partition 3, the emitting job
+    // `emitted`: an upstream that recomputed nondeterministically
+    def failure(scan: PrefixScan, counted: Seq[Row],
+                emitted: Seq[Row]): String = {
+      val table = scan.table(scan.count(3, counted.iterator).toArray)
+      intercept[RuntimeException](
+        scan.emit(table, 3, emitted.iterator).toList).getMessage
+    }
+    def names(msg: String, op: String, group: String): Unit =
+      assert(msg.startsWith(s"$op: partition 3 group $group ") &&
+        msg.contains("nondeterministically"), msg)
+    val cumSum = new PrefixScan("groupedCumSum", schema, Seq("g"),
+      Seq("cum" -> ValueOf("v")))
+    val ab = Seq(Row("a", 1L), Row("a", 2L), Row("b", 4L))
+    // the counted rows pass
+    assert(cumSum.emit(cumSum.table(cumSum.count(3, ab.iterator).toArray),
+        3, ab.iterator).map(_.getLong(2)).toList == List(1L, 3L, 4L))
+    // a group the counting job never recorded in this partition
+    names(failure(cumSum, ab, ab :+ Row("c", 5L)), "groupedCumSum", "[c]")
+    // a run with the recorded rows but a different weight sum
+    names(failure(cumSum, ab, Seq(Row("a", 1L), Row("a", 3L), ab(2))),
+      "groupedCumSum", "[a]")
+    // a run with a different row count
+    names(failure(cumSum, ab, ab.take(2) ++ Seq(Row("a", null), ab(2))),
+      "groupedCumSum", "[a]")
+    // a recorded group the emitting job never meets
+    names(failure(cumSum, ab, ab.take(2)), "groupedCumSum", "[b]")
+    // the ungrouped path: a row count, and a null-row weight, that
+    // differ from the counting job's
+    val rowNum = new PrefixScan("globalRowNumber", schema, Nil,
+      Seq("rn" -> EachRow))
+    names(failure(rowNum, ab, ab.tail), "globalRowNumber", "[]")
+    val fresh = new PrefixScan("surrogateKeysOrdered", schema, Nil,
+      Seq("__new_rank" -> NullIn("v")))
+    names(failure(fresh, Seq(Row("a", null), ab(1)), ab.take(2)),
+      "surrogateKeysOrdered", "[]")
   }
 
   test("reportShape groups dimension metrics under selectors") {

@@ -60,6 +60,23 @@ class RelationalSpec extends AnyFunSuite {
     assert(out == Map(10L -> 10L, 11L -> 11L, 12L -> 3L, 13L -> 12L))
   }
 
+  /** 1000 rows over 8 partitions; every third row carries an id. */
+  private def everyThirdId = spark.range(0, 1000, 1, 8)
+    .select($"id".as("k"),
+      when($"id" % 3 === 0, $"id" + 5000).cast("long").as("dw_id"))
+
+  test("surrogateKeysDistributed: dense ids, no single-partition funnel") {
+    // the two-phase numbering (no row bound): the new ids are unique
+    // and dense from max + 1, and the numbering runs in 8 tasks
+    val out = Relational.surrogateKeysOrdered(everyThirdId, "dw_id", "k",
+        9000L, nPartitions = 8)
+    assert(out.rdd.getNumPartitions == 8)
+    val ids = out.select("dw_id").as[Long].collect()
+    assert(ids.distinct.length == 1000)
+    val newIds = ids.filter(_ > 9000).sorted
+    assert(newIds.toSeq == (9001L to 9000L + 666L))
+  }
+
   test("surrogateKeysOrdered matches the orderCol-window reference " +
        "sequence") {
     import org.apache.spark.sql.expressions.Window
@@ -76,18 +93,8 @@ class RelationalSpec extends AnyFunSuite {
           Window.partitionBy($"dw_id".isNull).orderBy($"k"))))
       .select($"k", $"dw_id").as[(Long, Long)].collect().toMap
     assert(out == ref)
-    // every third row carries an id: the new ids are unique and dense
-    // from max + 1, with no single-partition funnel
-    val third = spark.range(0, 1000, 1, 8)
-      .select($"id".as("k"),
-        when($"id" % 3 === 0, $"id" + 5000).cast("long").as("dw_id"))
-    val ids = Relational.surrogateKeysOrdered(third, "dw_id", "k", 9000L,
-        nPartitions = 8)
-      .select("dw_id").as[Long].collect()
-    assert(ids.distinct.length == 1000)
-    val newIds = ids.filter(_ > 9000).sorted
-    assert(newIds.toSeq == (9001L to 9000L + 666L))
     // an IntegerType id column comes out LongType, existing ids kept
+    val third = everyThirdId
     val ints = third.withColumn("dw_id", $"dw_id".cast("int"))
     val widened = Relational.surrogateKeysOrdered(ints, "dw_id", "k",
         9000L, nPartitions = 8)

@@ -217,21 +217,24 @@ object Relational {
     else df.sparkSession.sessionState.conf.numShufflePartitions
 
   /** A Long weight the prefix kernel sums per row, read inside its
-    * partition iterators from an existing column of the input. */
-  private[graft] sealed trait Weight extends Serializable
-  /** 1 per row: the prefix is the row number. */
-  private[graft] case object EachRow extends Weight
+    * partition iterators from an existing column of the input, and the
+    * run slots it adds beside the row count (see [[Run]]). */
+  private[graft] sealed abstract class Weight(val slots: Int)
+      extends Serializable
+  /** 1 per row: the prefix is the row number (the run's row count). */
+  private[graft] case object EachRow extends Weight(0)
   /** The LongType column `c` under SQL null-frame semantics: a null
     * adds nothing, and the prefix is null until the frame holds a
-    * non-null value. */
-  private[graft] final case class ValueOf(c: String) extends Weight
+    * non-null value. Its slots are the sum and the non-null rows. */
+  private[graft] final case class ValueOf(c: String) extends Weight(2)
   /** 1 per row whose `c` is null (the rows still to be numbered). */
-  private[graft] final case class NullIn(c: String) extends Weight
+  private[graft] final case class NullIn(c: String) extends Weight(1)
 
   /** One (partition, group) run as the counting job recorded it, the
     * prefix its first row starts from (the group's runs in earlier
-    * partitions) and the group's total. Each is [rows, then per weight:
-    * sum, contributing rows]. */
+    * partitions) and the group's total. Each holds the rows in slot 0
+    * (also the sum of [[EachRow]]), then one sum per [[NullIn]] and a
+    * (sum, non-null rows) pair per [[ValueOf]]. */
   private[graft] final class Run(val recorded: Array[Long],
       val before: Array[Long], val total: Array[Long]) extends Serializable
 
@@ -264,7 +267,11 @@ object Relational {
         schema.fieldIndex(c)
       case NullIn(c) => schema.fieldIndex(c)
     }
-    private val width = 1 + 2 * weights.length
+    // each weight's first slot in a run; EachRow reads the row count
+    private val start = weights.scanLeft(1)(_ + _.slots)
+    private val width = start.last
+    private val slot = weights.indices.map(j =>
+      if (weights(j) == EachRow) 0 else start(j)).toArray
     private val outSlots = (prefixes.map(p => (false, p._2)) ++
       totals.map(t => (true, t._2)))
       .map { case (tot, w) => (tot, weights.indexOf(w)) }.toArray
@@ -279,17 +286,16 @@ object Relational {
       if (gIdx.isEmpty) Nil else gIdx.iterator.map(r.get).toList
 
     private def add(acc: Array[Long], r: Row): Unit = {
-      def bump(j: Int, w: Long): Unit = {
-        acc(1 + 2 * j) += w; acc(2 + 2 * j) += 1L
-      }
       acc(0) += 1L
       var j = 0
       while (j < weights.length) {
         val x = wIdx(j)
+        val s = slot(j)
         weights(j) match {
-          case EachRow => bump(j, 1L)
-          case ValueOf(_) => if (!r.isNullAt(x)) bump(j, r.getLong(x))
-          case NullIn(_) => if (r.isNullAt(x)) bump(j, 1L)
+          case EachRow =>
+          case NullIn(_) => if (r.isNullAt(x)) acc(s) += 1L
+          case ValueOf(_) =>
+            if (!r.isNullAt(x)) { acc(s) += r.getLong(x); acc(s + 1) += 1L }
         }
         j += 1
       }
@@ -342,8 +348,8 @@ object Relational {
 
         private def check(): Unit =
           if (run != null && !java.util.Arrays.equals(seen, run.recorded))
-            fail(i, cur, s"has [rows, (sum, count) per weight] " +
-              s"${seen.mkString(", ")} but the counting job recorded " +
+            fail(i, cur, s"has run slots ${seen.mkString(", ")} " +
+              "(rows, then the weight sums) but the counting job recorded " +
               run.recorded.mkString(", "))
 
         def hasNext: Boolean = {
@@ -373,14 +379,13 @@ object Relational {
           val out = new Array[Any](n + outSlots.length)
           var c = 0
           while (c < n) { out(c) = r.get(c); c += 1 }
+          def at(tot: Boolean, s: Int): Long =
+            if (tot) run.total(s) else run.before(s) + seen(s)
           while (c < out.length) {
             val (tot, j) = outSlots(c - n)
-            val s = 1 + 2 * j
-            val sum = if (tot) run.total(s) else run.before(s) + seen(s)
-            val cnt =
-              if (tot) run.total(s + 1) else run.before(s + 1) + seen(s + 1)
-            out(c) = if (cnt == 0L && weights(j).isInstanceOf[ValueOf]) null
-              else sum
+            val s = slot(j)
+            val none = weights(j).isInstanceOf[ValueOf] && at(tot, s + 1) == 0
+            out(c) = if (none) null else at(tot, s)
             c += 1
           }
           new GenericRow(out)

@@ -44,8 +44,10 @@ that still carry Bench's host canaries skip them; such bases also give
 staged and streaming queries at least 5 warm passes, and warm passes
 speed up pass over pass, so compare against them with
 `SPARK_GRAFT_WARM_PASSES=5` on both sides. The metric of a query is its
-`queries_warm` median, judged with `run_s`'s bound. Bench takes no
-seed: the seeds only label and order the pairs.
+`queries_warm` median, judged with `run_s`'s bound; its
+`queries_warm_driver_gap_s` is kept per run and its median per side is
+printed and written unjudged. Bench takes no seed: the seeds only label
+and order the pairs.
 """
 import math
 import argparse
@@ -121,7 +123,9 @@ def add_opens():
 
 def bench_once(checkout, classpath, opens, queries, run_dir):
     """One `graft.Bench` run of `queries` in a fresh JVM; its
-    `queries_warm` medians are the run's metrics."""
+    `queries_warm` medians are the run's metrics, and its
+    `queries_warm_driver_gap_s` (None where the artifact has none) ride
+    along unjudged."""
     os.makedirs(os.path.join(run_dir, "tmp"))
     out = os.path.join(run_dir, "bench.json")
     env = dict(os.environ, SPARK_GRAFT_ONLY=",".join(queries),
@@ -147,6 +151,8 @@ def bench_once(checkout, classpath, opens, queries, run_dir):
     shutil.rmtree(run_dir, ignore_errors=True)
     return {"correct": True, "attempted": len(queries), "failed": 0,
             "metrics": {q: art["queries_warm"][q] for q in queries},
+            "driver_gap_s": {q: art.get("queries_warm_driver_gap_s", {})
+                             .get(q) for q in queries},
             "wall_s": wall}
 
 
@@ -158,6 +164,12 @@ def quartiles(xs):
         hi = min(lo + 1, len(xs) - 1)
         return xs[lo] + (xs[hi] - xs[lo]) * (k - lo)
     return q(0.25), q(0.5), q(0.75)
+
+
+def median_of(xs):
+    """Median of the non-None values, None when there are none."""
+    xs = [x for x in xs if x is not None]
+    return round(statistics.median(xs), 3) if xs else None
 
 
 def summarize(runs, metrics):
@@ -253,7 +265,9 @@ def main(argv=None):
                              "attempted": r["attempted"],
                              "failed": r["failed"],
                              "harness_wall_s": round(r["wall_s"], 1),
-                             "metrics": r["metrics"]})
+                             "metrics": r["metrics"],
+                             **({"driver_gap_s": r["driver_gap_s"]}
+                                if queries else {})})
                 print(f"seed {seed} {side:6s} correct={r['correct']} "
                       f"failed={r['failed']}/{r['attempted']} "
                       + " ".join(f"{m['name']}={r['metrics'][m['name']]:.3f}"
@@ -262,6 +276,9 @@ def main(argv=None):
         shutil.rmtree(tmp, ignore_errors=True)
 
     seeds, summary = summarize(runs, metrics)
+    gaps = {q: {side: median_of([r["driver_gap_s"][q] for r in runs
+                                 if r["side"] == side])
+                for side in ("base", "change")} for q in queries}
     print(f"\n{label}: base {base_sha[:12]} vs working tree "
           f"({head_sha[:12]}{' + edits' if dirty else ''}), "
           f"{len(seeds)} seeds"
@@ -278,6 +295,9 @@ def main(argv=None):
               f"{s['change_median']:10.3f} {delta:>8s} {spread:>13s} "
               f"{s['pairs_better']:>3d}/{len(seeds)} {gap:>8s}  "
               f"{s['verdict']}")
+    for q, g in gaps.items():
+        print(f"  {q}: driver gap median base {g['base']} s, "
+              f"change {g['change']} s (not judged)")
     out = args.out or f"ab_{label}.json"
     with open(out, "w") as fh:
         json.dump({
@@ -289,7 +309,9 @@ def main(argv=None):
                        "tree": change_tree},
             "all_correct": all(r["correct"] for r in runs),
             "failed": sum(r["failed"] for r in runs),
-            "summary": summary, "runs": runs,
+            "summary": summary,
+            **({"driver_gap_median_s": gaps} if queries else {}),
+            "runs": runs,
         }, fh, indent=1)
         fh.write("\n")
     print(f"wrote {out}")

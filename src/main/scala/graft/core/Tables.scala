@@ -533,12 +533,4 @@ object Tables {
       .bucketBy(nBuckets, bucketCol).sortBy(bucketCol)
       .saveAsTable(table)
   }
-
-  /** Hive-layout partitioned write — at 100 TB, partitioning the
-    * warehouse tiers by load date (`dw_dt`) makes incremental reads and
-    * ranged deletes partition-pruned scans instead of full-table
-    * rewrites. */
-  def writePartitioned(df: org.apache.spark.sql.DataFrame, path: String,
-                       partitionCols: Seq[String]): Unit =
-    df.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(path)
 }

@@ -167,31 +167,45 @@ object GraftFunctions {
   *   .config("spark.sql.extensions", "graft.sql.GraftExtensions")
   * }}}
   *
-  * Besides the functions, the extension raises the default of Spark's
-  * own static `spark.sql.codegen.cache.maxEntries` from 100 to
-  * [[GraftExtensions.CodegenCacheEntries]]. Spark keeps compiled
-  * generated classes in one JVM-wide LRU cache of that many entries. A
-  * graft pipeline run as a repeated operation in one long-lived session
-  * (an ODS load + trgx + report window, or the corpus build) touches
-  * about 150–170 distinct classes per process, so at 100 every operation
-  * evicts the classes the next one needs and a warm operation
-  * recompiled ~120 of them (12–19 ms each); at 1000 a warm operation
-  * compiles almost none. An explicit value (builder `.config`, `--conf`,
-  * `-Dspark.sql.codegen.cache.maxEntries`) always wins.
+  * Besides the functions, the extension installs two defaults. An
+  * explicit value for either key (builder `.config`, `--conf`, a
+  * `-Dspark.*` property, spark-defaults, or for the second also
+  * `spark.hadoop.*` and core-site.xml) always wins.
   *
-  * The default reaches the cache because extensions are applied after
-  * the SparkContext exists but before the session state copies the
-  * context's conf, and `CodeGenerator` sizes its cache once, at the
-  * JVM's first code generation. The cache is JVM-wide: if a session
-  * without this extension generated code first, the cache is already
-  * sized and this default changes nothing — install the extension on
-  * the first session, or set the conf. */
+  * 1. Spark's own static `spark.sql.codegen.cache.maxEntries` goes from
+  *    100 to [[GraftExtensions.CodegenCacheEntries]]. Spark keeps
+  *    compiled generated classes in one JVM-wide LRU cache of that many
+  *    entries. A graft pipeline run as a repeated operation in one
+  *    long-lived session (an ODS load + trgx + report window, or the
+  *    corpus build) touches about 150–170 distinct classes per process,
+  *    so at 100 every operation evicts the classes the next one needs
+  *    and a warm operation recompiled ~120 of them (12–19 ms each); at
+  *    1000 a warm operation compiles almost none. The default reaches
+  *    the cache because extensions are applied after the SparkContext
+  *    exists but before the session state copies the context's conf,
+  *    and `CodeGenerator` sizes its cache once, at the JVM's first code
+  *    generation.
+  * 1. Hadoop's `fs.file.impl` on the SparkContext's live Hadoop conf
+  *    becomes [[graft.core.LocalFs]], which sets local file permissions
+  *    through java.nio. Without the native Hadoop library the stock
+  *    local file system forks `chmod` (~3 ms) for every directory and
+  *    file a write creates: ~90 launches per report_window operation.
+  *
+  * Both defaults are JVM-wide state that is fixed on first use: the
+  * codegen cache at the first code generation, and the `file:`
+  * FileSystem at the first lookup (Hadoop caches it per scheme,
+  * authority and user, not per conf). If a session without this
+  * extension got there first, the defaults change nothing, so install
+  * the extension on the first session or set the confs yourself. For
+  * the file system the extension logs a WARN in that case
+  * ([[graft.core.LocalFs.installDefault]]). */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftFunctions.descriptions.foreach(ext.injectFunction)
     GraftFunctions.tableDescriptions.foreach(ext.injectTableFunction)
     GraftBridge.contextConfDefault(GraftExtensions.CodegenCacheKey,
       GraftExtensions.CodegenCacheEntries.toString)
+    GraftBridge.activeHadoopConf.foreach(graft.core.LocalFs.installDefault)
   }
 }
 

@@ -75,6 +75,12 @@ object GraftBridge {
         org.apache.spark.SparkContext.getActive.map(_.conf)): Unit =
     conf.foreach(_.setIfMissing(key, value))
 
+  /** The active SparkContext's live Hadoop conf, which every session's
+    * `newHadoopConf()` copies (`SparkContext.getActive` is
+    * private[spark]). None when no SparkContext is running. */
+  def activeHadoopConf: Option[org.apache.hadoop.conf.Configuration] =
+    org.apache.spark.SparkContext.getActive.map(_.hadoopConfiguration)
+
   /** One parquet footer's Spark schema exactly as Spark's own schema
     * inference (`ParquetFileFormat.mergeSchemasInParallel`) derives it:
     * the writer's embedded Spark schema when present, else Spark's

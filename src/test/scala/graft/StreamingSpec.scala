@@ -606,9 +606,8 @@ class StreamingSpec extends AnyFunSuite {
     }
 
     val pdir = s"${graft.core.Tables.tmpDir}/part_write"
-    graft.core.Tables.writePartitioned(
-      Seq(("2016-01-01", 1), ("2016-02-01", 2)).toDF("dw_dt", "v"),
-      pdir, Seq("dw_dt"))
+    Seq(("2016-01-01", 1), ("2016-02-01", 2)).toDF("dw_dt", "v")
+      .write.mode("overwrite").partitionBy("dw_dt").parquet(pdir)
     val pruned = spark.read.parquet(pdir).filter($"dw_dt" === "2016-01-01")
     val plan = pruned.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters"))

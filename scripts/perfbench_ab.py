@@ -44,8 +44,9 @@ that still carry Bench's host canaries skip them; such bases also give
 staged and streaming queries at least 5 warm passes, and warm passes
 speed up pass over pass, so compare against them with
 `SPARK_GRAFT_WARM_PASSES=5` on both sides. The metric of a query is its
-`queries_warm` median, judged with `run_s`'s bound; its
-`queries_warm_driver_gap_s` is kept per run and its median per side is
+`queries_warm` median, judged with `run_s`'s bound; its median warm
+pass's driver gap, staged writes, Spark jobs and compiled classes
+(`WARM_SHAPE`) are kept per run, and their medians per side are
 printed and written unjudged. Bench takes no seed: the seeds only label
 and order the pairs.
 """
@@ -61,6 +62,13 @@ import tempfile
 import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+# per-query figures of the median warm pass kept from each Bench
+# artifact, unjudged: run key -> artifact key
+WARM_SHAPE = {"driver_gap_s": "queries_warm_driver_gap_s",
+              "staged": "queries_warm_staged",
+              "jobs": "queries_warm_jobs",
+              "compiles": "queries_warm_compiles"}
 
 
 def git(*args):
@@ -123,9 +131,8 @@ def add_opens():
 
 def bench_once(checkout, classpath, opens, queries, run_dir):
     """One `graft.Bench` run of `queries` in a fresh JVM; its
-    `queries_warm` medians are the run's metrics, and its
-    `queries_warm_driver_gap_s` (None where the artifact has none) ride
-    along unjudged."""
+    `queries_warm` medians are the run's metrics, and its `WARM_SHAPE`
+    figures (None where the artifact has none) ride along unjudged."""
     os.makedirs(os.path.join(run_dir, "tmp"))
     out = os.path.join(run_dir, "bench.json")
     env = dict(os.environ, SPARK_GRAFT_ONLY=",".join(queries),
@@ -151,8 +158,8 @@ def bench_once(checkout, classpath, opens, queries, run_dir):
     shutil.rmtree(run_dir, ignore_errors=True)
     return {"correct": True, "attempted": len(queries), "failed": 0,
             "metrics": {q: art["queries_warm"][q] for q in queries},
-            "driver_gap_s": {q: art.get("queries_warm_driver_gap_s", {})
-                             .get(q) for q in queries},
+            **{k: {q: art.get(a, {}).get(q) for q in queries}
+               for k, a in WARM_SHAPE.items()},
             "wall_s": wall}
 
 
@@ -266,7 +273,7 @@ def main(argv=None):
                              "failed": r["failed"],
                              "harness_wall_s": round(r["wall_s"], 1),
                              "metrics": r["metrics"],
-                             **({"driver_gap_s": r["driver_gap_s"]}
+                             **({k: r[k] for k in WARM_SHAPE}
                                 if queries else {})})
                 print(f"seed {seed} {side:6s} correct={r['correct']} "
                       f"failed={r['failed']}/{r['attempted']} "
@@ -276,9 +283,10 @@ def main(argv=None):
         shutil.rmtree(tmp, ignore_errors=True)
 
     seeds, summary = summarize(runs, metrics)
-    gaps = {q: {side: median_of([r["driver_gap_s"][q] for r in runs
-                                 if r["side"] == side])
-                for side in ("base", "change")} for q in queries}
+    shape = {k: {q: {side: median_of([r[k][q] for r in runs
+                                      if r["side"] == side])
+                     for side in ("base", "change")} for q in queries}
+             for k in WARM_SHAPE}
     print(f"\n{label}: base {base_sha[:12]} vs working tree "
           f"({head_sha[:12]}{' + edits' if dirty else ''}), "
           f"{len(seeds)} seeds"
@@ -295,9 +303,10 @@ def main(argv=None):
               f"{s['change_median']:10.3f} {delta:>8s} {spread:>13s} "
               f"{s['pairs_better']:>3d}/{len(seeds)} {gap:>8s}  "
               f"{s['verdict']}")
-    for q, g in gaps.items():
-        print(f"  {q}: driver gap median base {g['base']} s, "
-              f"change {g['change']} s (not judged)")
+    for q in queries:
+        print(f"  {q} medians, base / change (not judged): "
+              + ", ".join(f"{k} {shape[k][q]['base']} / "
+                          f"{shape[k][q]['change']}" for k in WARM_SHAPE))
     out = args.out or f"ab_{label}.json"
     with open(out, "w") as fh:
         json.dump({
@@ -310,7 +319,7 @@ def main(argv=None):
             "all_correct": all(r["correct"] for r in runs),
             "failed": sum(r["failed"] for r in runs),
             "summary": summary,
-            **({"driver_gap_median_s": gaps} if queries else {}),
+            **({"warm_shape_medians": shape} if queries else {}),
             "runs": runs,
         }, fh, indent=1)
         fh.write("\n")

@@ -487,7 +487,7 @@ object CoreQueries {
         .orderBy("o_orderkey")),
 
     // §2.6 row 42 + §2.2 row 13 — the sliding lag pattern
-    // (collect-kv → month axis → kv->lkp lag lookups → deltas)
+    // (collect-kv → month-end keys → kv->lkp lag lookups → deltas)
     "sliding_scores" -> ((s, dir) => {
       val m = t(s, dir, "orders")
         .join(t(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
@@ -495,9 +495,7 @@ object CoreQueries {
                  dtStr(last_day(col("o_orderdate"))).as("dt"))
         .agg(sum(col("o_totalprice").cast("decimal(18,2)"))
           .cast("decimal(38,2)").cast("string").as("val"))
-      val rng = m.agg(min("dt"), max("dt")).first()
-      Relational.slidingScores(m, Seq("seg"), "dt", "val",
-          rng.getString(0), rng.getString(1))
+      Relational.slidingScores(m, Seq("seg"), "dt", "val")
         .select(col("seg"), col("dt"),
           col("value").cast("decimal(38,2)").cast("string").as("value"),
           col("max_value").cast("decimal(38,3)").cast("string")

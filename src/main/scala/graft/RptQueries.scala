@@ -135,9 +135,7 @@ object RptQueries {
                    .as("dt"))
         .agg(sum(col("o_totalprice").cast("decimal(18,2)"))
           .cast("decimal(38,2)").cast("string").as("val"))
-      val rng = m.agg(min("dt"), max("dt")).first()
       Reports.slidingScoreReport(m, Seq("seg"), "dt", "val",
-          rng.getString(0), rng.getString(1),
           Seq("score" -> col("value")))
         .orderBy("seg")
     }),
@@ -202,10 +200,8 @@ object RptQueries {
         .groupBy("bg", "bottler", "channel", "code", "item", "dw_dt")
         .agg(sum(col("o_totalprice").cast("decimal(18,2)"))
           .cast("decimal(38,2)").cast("string").as("val"))
-      val rng = m.agg(min("dw_dt"), max("dw_dt")).first()
       val sliding = Relational.slidingScores(m,
-        Seq("bg", "bottler", "channel", "code", "item"), "dw_dt", "val",
-        rng.getString(0), rng.getString(1))
+        Seq("bg", "bottler", "channel", "code", "item"), "dw_dt", "val")
       val kpi0 = element_at(split(col("item"), "-"), 1)
       val filtered = sliding
         .filter(col("code").isNull) // (not !code)
@@ -794,7 +790,7 @@ object RptQueries {
     }),
 
     // m_cocacola_score_bottler_ranking.clj:63-85 — same composition,
-    // NOT pinned (dw_dt = the axis month), dims [bg=bg_sort,
+    // NOT pinned (dw_dt = the row's month), dims [bg=bg_sort,
     // bottler=NAME], metrics drop the yoy lag and add abbr
     "report_score_bottler_ranking" -> ((s, dir) => {
       val joined = periodSliding(s, dir)
@@ -828,7 +824,7 @@ object RptQueries {
           .toDF("code", "cm_channel", "cm_metrics", "abbreviation",
             "c_total_score", "c_weight")
       }
-      val joined = scoreSlidingWithCfg(s, dir, cfg, "rpt_cm")
+      val joined = scoreSlidingWithCfg(s, dir, cfg)
         .withColumn("selector",
           concat(lit("[\"period="), col("dt"),
             lit("\",\"bg="), col("bg_sort"),
@@ -1022,10 +1018,9 @@ object RptQueries {
                  "item", "dw_dt")
         .agg(sum(col("o_totalprice").cast("decimal(18,2)"))
           .cast("decimal(38,2)").cast("string").as("val"))
-      val rng = m.agg(min("dw_dt"), max("dw_dt")).first()
       val sliding = Relational.slidingScores(m,
         Seq("bg", "bottler", "bg_sort", "bottler_sort", "code", "item"),
-        "dw_dt", "val", rng.getString(0), rng.getString(1))
+        "dw_dt", "val")
       // vars->kv [:value :max_value :pp_value :last_dec_value
       // :last_year_same_month_score] — nil entries KEPT (cheshire
       // renders them as JSON null), unlike the reportShape leaves
@@ -1478,28 +1473,15 @@ object RptQueries {
       .orderBy("dw_dt", "selector")
 
   /** Sliding over the score fact + a broadcast config join — the
-    * shared first half of the four trgx-composition reports. The
-    * month fact is STAGED once: the axis one-row fetch and the
-    * sliding pipeline would otherwise each recompute the star-join
-    * subtree (the slidingSelectorReport argument). */
+    * shared first half of the four trgx-composition reports. */
   private def scoreSlidingWithCfg(s: SparkSession, dir: String,
-      cfg: DataFrame, tag: String): DataFrame = {
-    // axis bounds ride the staged write's parquet footers (exact
-    // string min/max — zero extra Spark jobs, the
-    // slidingSelectorReport discipline); the one-row agg is only the
-    // stats-absent fallback
-    val (m, footerRng) = graft.core.Tables.stagedWithStringRange(
-      scoreFact(s, dir)
-        .groupBy("bg", "bottler", "bg_sort", "bottler_sort", "code",
-                 "item", "dw_dt")
-        .agg(sum(col("o_totalprice").cast("decimal(18,2)"))
-          .cast("decimal(38,2)").cast("string").as("val")),
-      tag, "dw_dt")
-    val (lo, hi) = footerRng.getOrElse {
-      val rng = m.agg(min("dw_dt"), max("dw_dt")).first()
-      (rng.getString(0), rng.getString(1))
-    }
-    Relational.slidingScores(m, periodMKeys, "dw_dt", "val", lo, hi)
+      cfg: DataFrame): DataFrame = {
+    val m = scoreFact(s, dir)
+      .groupBy("bg", "bottler", "bg_sort", "bottler_sort", "code",
+               "item", "dw_dt")
+      .agg(sum(col("o_totalprice").cast("decimal(18,2)"))
+        .cast("decimal(38,2)").cast("string").as("val"))
+    Relational.slidingScores(m, periodMKeys, "dw_dt", "val")
       .join(broadcast(cfg), Seq("code"))
   }
 
@@ -1522,7 +1504,7 @@ object RptQueries {
           import s.implicits._
           periodPathConfig.toDF("code", "cfg_channel", "cfg_kpi",
             "cfg_metrics", "c_total_score", "c_weight")
-        }, "rpt_period")
+        })
         .filter(col("cfg_channel") =!= "TOTAL" &&
           !col("cfg_kpi").isin(periodKpiExclude: _*))
         .withColumn("kpis",
@@ -1704,7 +1686,7 @@ object RptQueries {
     * (key, value-SQL-over-s) outermost first; `metrics` are
     * (name, value-SQL-over-s) — wrap string-valued metrics in
     * to_json(...); `pinnedDwDt` pins the output dw_dt (trend reports)
-    * vs None = the axis month;
+    * vs None = the row's month;
     * `escapeDims` names dim keys whose VALUES contain JSON (the
     * deep-dive item payload) — their rendered key goes through
     * to_json, exactly as pairTreeToJson escapes it, while the sort

@@ -28,9 +28,7 @@ object SparkEntry {
                  .as("dt"))
       .agg(sum(col("o_totalprice").cast("decimal(18,2)"))
         .cast("decimal(38,2)").cast("string").as("val"))
-    val rng = m.agg(min("dt"), max("dt")).first()
-    val sliding = Relational.slidingScores(m, Seq("seg"), "dt", "val",
-      rng.getString(0), rng.getString(1))
+    val sliding = Relational.slidingScores(m, Seq("seg"), "dt", "val")
     Relational.reportShape(
       sliding.withColumn("n", lit(1L)),
       Seq("seg"), Seq("dt"),

@@ -227,35 +227,17 @@ object Tables {
       (org.apache.spark.sql.DataFrame, Long) =
     stageWith(df, tag)(parquetRowCount)
 
-  /** [[staged]] plus the exact (min, max) of one STRING column of what
-    * was just written, read from the parquet footers — zero extra Spark
-    * jobs. Footer min/max for BINARY columns is the unsigned
-    * byte-lexicographic order, which is exactly UTF8String's (Spark's
-    * string min/max), so untruncated statistics equal
-    * `df.agg(min(col), max(col)).first()` bit-for-bit over the non-null
-    * rows. Returns None when any footer lacks usable statistics, when a
-    * bound may have been truncated, or when no block carries a non-null
-    * value (caller falls back to the agg job — correctness never rides
-    * on stats being present). */
-  def stagedWithStringRange(df: org.apache.spark.sql.DataFrame,
-      tag: String, colName: String):
-      (org.apache.spark.sql.DataFrame, Option[(String, String)]) =
-    stageWith(df, tag)(parquetStringMinMax(_, _, colName))
-
-  /** Footer-statistics (min, max) of a top-level string column across
-    * every visible parquet file under `path` — see
-    * [[stagedWithStringRange]] for the exactness argument. */
-  def parquetStringMinMax(path: String,
-      conf: org.apache.hadoop.conf.Configuration,
-      colName: String): Option[(String, String)] =
-    stringMinMax(footerBlocks(path, conf), conf, colName)
-
   /** Footer-statistics (min, max, row count) of a top-level string
     * column over exactly the parquet files `files` (paths or URIs, e.g.
     * a file relation's `inputFiles`) — the load-range bookkeeping's
-    * zero-job answer. None under the same conditions as
-    * [[parquetStringMinMax]], including when no row holds a non-null
-    * value. */
+    * zero-job answer. Footer min/max for BINARY columns is the unsigned
+    * byte-lexicographic order, which is exactly UTF8String's (Spark's
+    * string min/max), so untruncated statistics equal
+    * `agg(min(col), max(col))` bit-for-bit over the non-null rows.
+    * None when any footer lacks usable statistics, when a bound may
+    * have been truncated, or when no row holds a non-null value (the
+    * caller falls back to the agg job — correctness never rides on
+    * stats being present). */
   def parquetFilesStringRange(files: Seq[String],
       conf: org.apache.hadoop.conf.Configuration,
       colName: String): Option[(String, String, Long)] = {

@@ -211,40 +211,6 @@ object Functions {
       .otherwise(array().cast("array<string>"))
   }
 
-  /** Driver-side twin of [[mkMonthDts]] for callers whose range bounds
-    * are Scala strings (the sliding-report axis): the same month-ends
-    * of [trunc(start,MM), trunc(end,MM)] kept inside the string range,
-    * as a plain Seq to embed via `typedlit` — zero per-row HOF
-    * evaluation. Null or inverted bounds yield an EMPTY Seq (explode
-    * of an empty literal ≡ explode of mkMonthDts' NULL array: zero
-    * rows). Parity with the Column form is pinned in FunctionsSpec. */
-  def monthEndsSeq(start: String, end: String): Seq[String] = {
-    import java.time.LocalDate
-    // DELIBERATE divergence from the Column form on MALFORMED bounds:
-    // mkMonthDts' to_date raised a per-row SparkDateTimeException at
-    // ACTION time (ANSI); a driver string that fails to parse here is
-    // a caller bug, so fail fast and loud at plan construction with
-    // the bound named (FunctionsSpec pins the message)
-    def parse(s: String, which: String): LocalDate =
-      try LocalDate.parse(s) catch {
-        case e: java.time.format.DateTimeParseException =>
-          throw new IllegalArgumentException(
-            s"monthEndsSeq: unparseable $which bound '$s' " +
-              "(expected yyyy-MM-dd)", e)
-      }
-    if (start == null || end == null) Seq.empty
-    else {
-      val ms = parse(start, "start").withDayOfMonth(1)
-      val me = parse(end, "end").withDayOfMonth(1)
-      if (ms.isAfter(me)) Seq.empty
-      else Iterator.iterate(ms)(_.plusMonths(1))
-        .takeWhile(!_.isAfter(me))
-        .map(m => m.withDayOfMonth(m.lengthOfMonth).toString)
-        .filter(x => x >= start && x <= end)
-        .toSeq
-    }
-  }
-
   // ---- map/array helpers (trgx.clj:46-60)
 
   /** `vars->kv`: zip a static header with value columns into a map

@@ -50,57 +50,56 @@ object Relational {
 
   /** The sliding-score pattern (SURVEY §2.6; reference
     * m_cocacola_score_overall.clj:42-57): collapse a (group, dt, value)
-    * fact to `{dt → value}` per group, explode a month-end date axis,
-    * look up the 3 reference dates per axis date, emit deltas.
+    * fact to `{dt → value}` per group and look up the 3 reference dates
+    * of each month-end key, emitting deltas.
+    *
+    * The reference crosses each map with an `mk-month-dts` axis over the
+    * fact's own date range and keeps the axis dates that have a value;
+    * that is exactly each group's own canonical month-end keys, so the
+    * map is exploded directly — no axis, no range fetch. A key that is
+    * not a `yyyy-MM-dd` month end (or does not parse) emits no row but
+    * still counts toward `max_value`.
     *
     * Input: df with `groupCols`, a date-string column `dtCol`, and a
     * *string-formatted* value column `valCol` (decimal-cast upstream so
-    * arithmetic is exact). Output: one row per (group, axis-date) where
-    * the axis date has a value, with mom/ytd/yoy deltas.
+    * arithmetic is exact). Output: one row per (group, month-end key)
+    * with a non-null value: groupCols, dt, value, max_value, prev_mom,
+    * prev_ytd, prev_yoy, delta_mom, delta_ytd, delta_yoy.
     *
-    * Scale: ONE shuffle (the groupBy); the axis explode and the lag
-    * lookups are map-side on the compact per-group map — no self-joins,
-    * no window sort over the raw fact.
+    * Scale: ONE shuffle (the groupBy); the explode and the lag lookups
+    * are map-side on the compact per-group map — no self-joins, no
+    * window sort over the raw fact.
     */
   def slidingScores(df: DataFrame, groupCols: Seq[String], dtCol: String,
-                    valCol: String, axisStart: String,
-                    axisEnd: String): DataFrame = {
+                    valCol: String): DataFrame = {
     // the groupBy's exchange is pinned as a USER repartition on the
     // group key (same hash clustering, so the aggregate adds no second
     // exchange): the downstream of this shuffle is the suite's most
-    // CPU-dense stage per byte — map finalize, a ~window-sized axis
-    // explode per group, 4 map lookups per axis row, then the
-    // pair-tree partial agg — so AQE's byte-based partition coalescing
-    // (which sees ~1 MB and folds the stage to ONE task, serializing
-    // it; r17 profiler: 2.1-4.8 s single-task stages, the dominant
-    // cost of every sliding report) is the wrong heuristic here. The
-    // width is pinned to the session's spark.sql.shuffle.partitions —
-    // a scale-adaptive conf, not a local constant — via the explicit
-    // numPartitions form, which AQE never coalesces (the by-column
-    // form still coalesced to minPartitionSize: 3 tasks of ~1 MB in
-    // the r17 A/B, leaving 29 of 32 cores idle under a CPU-dense
-    // stage). Partial collect_kv provided no map-side reduction anyway
-    // ((group, dt) is unique at this grain), so shuffle bytes are
-    // unchanged.
+    // CPU-dense stage per byte — map finalize, a per-group explode, 4
+    // map lookups per output row, then the pair-tree partial agg — so
+    // AQE's byte-based partition coalescing (which sees ~1 MB and
+    // folds the stage to ONE task, serializing it; r17 profiler:
+    // 2.1-4.8 s single-task stages, the dominant cost of every sliding
+    // report) is the wrong heuristic here. The width is pinned to the
+    // session's spark.sql.shuffle.partitions — a scale-adaptive conf,
+    // not a local constant — via the explicit numPartitions form,
+    // which AQE never coalesces (the by-column form still coalesced to
+    // minPartitionSize: 3 tasks of ~1 MB in the r17 A/B, leaving 29 of
+    // 32 cores idle under a CPU-dense stage). Partial collect_kv
+    // provided no map-side reduction anyway ((group, dt) is unique at
+    // this grain), so shuffle bytes are unchanged.
     val in = if (groupCols.isEmpty) df
       else df.repartition(
         df.sparkSession.sessionState.conf.numShufflePartitions,
         groupCols.map(col): _*)
     val kv = in.groupBy(groupCols.map(col): _*)
       .agg(Aggregators.collectKv(col(dtCol), col(valCol)).as("dt_kv"))
-    // the axis bounds are driver strings in every caller, so build the
-    // month-end axis ONCE driver-side (a ~window-sized list) instead of
-    // re-evaluating mkMonthDts' interpreted filter/transform HOFs per
-    // group row — the Scala twin replicates mkMonthDts exactly
-    // (month-ends of [trunc(start), trunc(end)] kept inside the STRING
-    // range; empty on an inverted or null range, which explodes to
-    // zero rows just like mkMonthDts' NULL array). Pinned against the
-    // Column form in FunctionsSpec.
-    val axis = kv.withColumn(
-      "dt", explode(typedlit(monthEndsSeq(axisStart, axisEnd))))
-    val withRefs = axis
-      .withColumn("value", element_at(col("dt_kv"), col("dt")))
-      .filter(col("value").isNotNull)
+    val withRefs = kv
+      .select(groupCols.map(col) :+ col("dt_kv") :+
+        explode(col("dt_kv")).as(Seq("dt", "value")): _*)
+      // try_to_date: a malformed key drops instead of raising under ANSI
+      .filter(col("value").isNotNull && col("dt") ===
+        date_format(last_day(try_to_date(col("dt"))), "yyyy-MM-dd"))
       // ?max-value: numeric max over the group's whole {dt→value} map
       // (m_cocacola_score_overall.clj:53) — values are decimal strings,
       // so compare numerically, not lexicographically. The element-wise
@@ -120,6 +119,26 @@ object Relational {
       .withColumn("delta_ytd", delta(col("value"), col("prev_ytd")))
       .withColumn("delta_yoy", delta(col("value"), col("prev_yoy")))
       .drop("dt_kv")
+  }
+
+  /** [[slidingScores]] restricted to month-end keys inside the string
+    * range [axisStart, axisEnd] — the reference's `mk-month-dts start
+    * end` axis when it is narrower than the data. A null or inverted
+    * range yields no rows; a bound that is not `yyyy-MM-dd` fails at
+    * plan construction, naming the bound. */
+  def slidingScores(df: DataFrame, groupCols: Seq[String], dtCol: String,
+                    valCol: String, axisStart: String,
+                    axisEnd: String): DataFrame = {
+    for ((b, which) <- Seq(axisStart -> "start", axisEnd -> "end")
+         if b != null)
+      try java.time.LocalDate.parse(b) catch {
+        case e: java.time.format.DateTimeParseException =>
+          throw new IllegalArgumentException(
+            s"slidingScores: unparseable $which bound '$b' " +
+              "(expected yyyy-MM-dd)", e)
+      }
+    slidingScores(df, groupCols, dtCol, valCol)
+      .filter(col("dt") >= lit(axisStart) && col("dt") <= lit(axisEnd))
   }
 
   /** `row-num` surrogate-key assignment, window form (reference

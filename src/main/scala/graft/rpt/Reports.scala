@@ -13,15 +13,13 @@ object Reports {
 
   /** The canonical sliding-score report (18 of 26 reference reports;
     * m_cocacola_score_overall.clj:42-86): monthly fact → collect-kv →
-    * month-axis lag deltas → tr-dimension-metrics pair-tree JSON per
+    * month-end lag deltas → tr-dimension-metrics pair-tree JSON per
     * selector. `fact` must carry groupCols + dtCol(yyyy-MM-dd month-end)
     * + valCol(string-formatted decimal). */
   def slidingScoreReport(fact: DataFrame, groupCols: Seq[String],
-                         dtCol: String, valCol: String, axisStart: String,
-                         axisEnd: String,
+                         dtCol: String, valCol: String,
                          metrics: Seq[(String, Column)]): DataFrame = {
-    val sliding = Relational.slidingScores(fact, groupCols, dtCol, valCol,
-      axisStart, axisEnd)
+    val sliding = Relational.slidingScores(fact, groupCols, dtCol, valCol)
     Relational.reportShape(sliding, groupCols, Seq("dt"), metrics)
   }
 
@@ -45,13 +43,12 @@ object Reports {
     * sliding, but lag lookups only join within a group, so the filter
     * commutes and is applied BEFORE the collect-kv aggregation here
     * (no sliding maps built for groups that are then discarded; the
-    * oracles filter early for the same reason). The filtered fact is
-    * STAGED once — the month-axis one-row fetch and the sliding
-    * pipeline would otherwise each recompute the fact's join subtree
-    * (the corpus_drift scan-duplication argument). `derive` projects
-    * the report's selector / dw_dt / dim-value columns over the
-    * sliding output (sliding emits the axis date as `dt`) and MUST
-    * define "selector" and "dw_dt"; `dimCols` nest outermost first. */
+    * oracles filter early for the same reason). The result is one lazy
+    * plan: a filter that keeps no row yields an empty report. `derive`
+    * projects the report's selector / dw_dt / dim-value columns over
+    * the sliding output (sliding emits the month-end key as `dt`) and
+    * MUST define "selector" and "dw_dt"; `dimCols` nest outermost
+    * first. */
   def slidingSelectorReport(m: DataFrame, groupCols: Seq[String],
                             dtCol: String, valCol: String,
                             rowFilter: Column,
@@ -60,23 +57,8 @@ object Reports {
                             metrics: Seq[(String, Column)],
                             project: String, category: String,
                             report: String): DataFrame = {
-    // the month axis comes from the parquet footers of the staged
-    // write (exact string min/max — zero extra Spark jobs); the
-    // one-row agg fetch is only the fallback when stats are absent
-    val (fact, footerRng) = graft.core.Tables.stagedWithStringRange(
-      m.filter(rowFilter), s"rpt_$report", dtCol)
-    val (axisLo, axisHi) = footerRng.getOrElse {
-      val rng = fact.agg(min(dtCol), max(dtCol)).first()
-      // an all-null range means rowFilter ate every fact row — a bad
-      // filter constant in a new instantiation; fail loudly instead of
-      // shipping a silently empty report (r9 ADVICE)
-      require(!rng.isNullAt(0),
-        s"slidingSelectorReport($report): rowFilter eliminated every " +
-          "fact row — check the filter constants")
-      (rng.getString(0), rng.getString(1))
-    }
-    val sliding = Relational.slidingScores(fact, groupCols, dtCol,
-      valCol, axisLo, axisHi)
+    val sliding = Relational.slidingScores(m.filter(rowFilter), groupCols,
+      dtCol, valCol)
     val withSel = derive.foldLeft(sliding) {
       case (d, (n, c)) => d.withColumn(n, c)
     }
@@ -103,14 +85,16 @@ object Reports {
     *
     * `members` are (name, thunk) pairs each yielding one report's
     * DataFrame in the [[sinkColumns]] shape (enforced loudly — a
-    * mis-shaped member would silently corrupt the shared sink).
-    * All member outputs are unioned and appended to `sinkPath` in ONE
-    * write (one Spark job for the whole family — each member subtree
-    * executes independently inside it), then the next-dt bookkeeping
-    * runs ONCE over the merged sink, excluding the `9999-12-31`
-    * sentinel rows the period reports carry (they are selector-keyed
-    * bookkeeping rows, not load-window facts — counting them would
-    * pin next-dt at year 9999 forever).
+    * mis-shaped member would silently corrupt the shared sink). The
+    * thunks build serially, in order: a member build only plans (the
+    * few members that stage an input run that one write), so there is
+    * nothing to overlap. All member outputs are unioned and appended
+    * to `sinkPath` in ONE write (one Spark job for the whole family —
+    * each member subtree executes independently inside it), then the
+    * next-dt bookkeeping runs ONCE over the merged sink, excluding the
+    * `9999-12-31` sentinel rows the period reports carry (they are
+    * selector-keyed bookkeeping rows, not load-window facts — counting
+    * them would pin next-dt at year 9999 forever).
     *
     * Fact sharing is the caller's lever: wrap the call so the shared
     * upstream (the star join every tap synthesizes from) is staged
@@ -124,48 +108,14 @@ object Reports {
                 endDt: String = "9999-12-31")
       : ((String, String), DataFrame) = {
     require(members.nonEmpty, "empty report family")
-    // members build CONCURRENTLY on a bounded driver pool: each build
-    // is a serial chain of tiny jobs (staged fact write + footer-stat
-    // axis read), so the family's wall time was 31 serialized chains —
-    // pure driver/scheduler latency, not compute. The union below
-    // still awaits every member IN ORDER, so the unioned plan, the
-    // sink rows, and the returned frame are identical to the serial
-    // build (ReportFamilySpec pins it). Staged dirs registered from
-    // the worker threads land in the caller's scope via scopedFuture.
-    //
-    // Pool width scales with the session's parallelism instead of a
-    // flat 8 (r17): the per-member jobs here are FEW-TASK (the facts
-    // AQE-coalesce to 1-2 partitions at bench scale), so a pool of 8
-    // left 3/4 of a 32-core box idle — the r17 profiler measured the
-    // full family at sum(job ms) ≈ 115 s vs wall 24.5 s, i.e. the
-    // pool, not the cluster, was the ceiling. At cluster scale wider
-    // in-flight jobs just FIFO-queue and back-fill each other's tails
-    // (guide §2.6), so the width is min(members, max(8, half the
-    // default parallelism)) — never fewer than the r16 shape, never
-    // more than the member count; half rather than all cores because
-    // the builder threads do driver-side work (planning, footer
-    // reads) that competes with the in-JVM executor threads in local
-    // mode, and the r17 A/B (pool 16 vs 31, family-only bench) showed
-    // no median gain past 16.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(members.size,
-        math.max(8, spark.sparkContext.defaultParallelism / 2)))
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    val frames = try {
-      val futs = members.map { case (name, build) =>
-        graft.core.Tables.scopedFuture {
-          val df = build()
-          require(df.schema.fieldNames.toSeq == sinkColumns,
-            s"family member $name must emit the ms.report shape " +
-              s"(${sinkColumns.mkString(", ")}), got " +
-              df.schema.fieldNames.mkString(", "))
-          df
-        }
-      }
-      futs.map(f => scala.concurrent.Await.result(f,
-        scala.concurrent.duration.Duration.Inf))
-    } finally pool.shutdown()
+    val frames = members.map { case (name, build) =>
+      val df = build()
+      require(df.schema.fieldNames.toSeq == sinkColumns,
+        s"family member $name must emit the ms.report shape " +
+          s"(${sinkColumns.mkString(", ")}), got " +
+          df.schema.fieldNames.mkString(", "))
+      df
+    }
     val union = frames.reduce(_ unionByName _)
     union.write.mode("append").parquet(sinkPath)
     // every appender writes the ms.report shape (enforced above), so

@@ -109,34 +109,6 @@ class FunctionsSpec extends AnyFunSuite {
     assert(out == Seq("2016-01-31", "2016-02-29", "2016-03-31"))
   }
 
-  test("monthEndsSeq == mkMonthDts Column form across edge ranges") {
-    val ranges = Seq(
-      ("2016-01-31", "2016-04-15"),   // partial last month
-      ("2016-01-31", "2016-01-31"),   // single month-end, inclusive
-      ("2016-02-01", "2016-02-28"),   // leap-year Feb 29 EXCLUDED by
-                                      //   the string range filter
-      ("2016-02-01", "2016-02-29"),   // ...and INCLUDED here
-      ("2015-12-31", "2016-01-01"),   // end before first month-end
-      ("2024-03-15", "2024-01-15"),   // inverted → empty
-      ("2023-11-02", "2024-02-02"),   // year boundary
-      ("2016-01-01", "2016-01-30"))   // no month-end in range
-    for ((s, e) <- ranges) {
-      val colForm = spark.range(1)
-        .select(coalesce(mkMonthDts(lit(s), lit(e)),
-          typedlit(Seq.empty[String])))
-        .as[Seq[String]].head()
-      assert(monthEndsSeq(s, e) == colForm, s"range ($s, $e)")
-    }
-    assert(monthEndsSeq(null, "2016-01-31") == Seq.empty)
-    assert(monthEndsSeq("2016-01-31", null) == Seq.empty)
-    // malformed bounds fail FAST at plan construction, naming the bound
-    // (deliberately not mkMonthDts' per-row action-time ANSI error)
-    val e = intercept[IllegalArgumentException] {
-      monthEndsSeq("2016-1-5", "2016-03-31")
-    }
-    assert(e.getMessage.contains("start bound '2016-1-5'"))
-  }
-
   test("mapToCanonicalString sorts keys") {
     val out = spark.range(1)
       .select(mapToCanonicalString(

@@ -51,6 +51,80 @@ class RelationalSpec extends AnyFunSuite {
     assert(mx.toSeq == Seq("130.000"))
   }
 
+  /** Two groups: g carries a leap-year Feb 29, a mid-month key and a
+    * month-13 key (both counted in max_value, neither emits a row) and
+    * a null value (no row); h has a single month. */
+  private def slidingInput = Seq(
+      ("g", "2016-01-31", "100.00"), ("g", "2016-02-29", "130.00"),
+      ("g", "2016-02-15", "999.00"), ("g", "2016-13-31", "7.00"),
+      ("g", "2015-12-31", null), ("g", "2015-02-28", "80.00"),
+      ("h", "2017-03-31", "5.00"))
+    .toDF("g", "dt", "v")
+
+  test("slidingScores unbounded == bounded over the data's own range") {
+    val m = slidingInput
+    val rng = m.agg(min("dt"), max("dt")).first()
+    val unbounded = Relational.slidingScores(m, Seq("g"), "dt", "v")
+    val bounded = Relational.slidingScores(m, Seq("g"), "dt", "v",
+      rng.getString(0), rng.getString(1))
+    assert(unbounded.columns.toSeq == Seq("g", "dt", "value",
+      "max_value", "prev_mom", "prev_ytd", "prev_yoy", "delta_mom",
+      "delta_ytd", "delta_yoy"))
+    assert(unbounded.collect().toSet == bounded.collect().toSet)
+    val rows = unbounded.select($"g", $"dt", $"value",
+        $"max_value".cast("string"))
+      .as[(String, String, String, String)].collect().toSet
+    assert(rows == Set(
+      ("g", "2015-02-28", "80.00", "999.000"),
+      ("g", "2016-01-31", "100.00", "999.000"),
+      ("g", "2016-02-29", "130.00", "999.000"),
+      ("h", "2017-03-31", "5.00", "5.000")))
+    // the reference's mk-month-dts axis over the same range, crossed
+    // with each group's map, keeps exactly the same (group, dt, value)
+    val axis = m.groupBy("g")
+      .agg(graft.agg.Aggregators.collectKv($"dt", $"v").as("kv"))
+      .withColumn("dt", explode(graft.functions.Functions.mkMonthDts(
+        lit(rng.getString(0)), lit(rng.getString(1)))))
+      .select($"g", $"dt", element_at($"kv", $"dt").as("value"))
+      .filter($"value".isNotNull)
+      .as[(String, String, String)].collect().toSet
+    assert(axis == rows.map(r => (r._1, r._2, r._3)))
+
+    val empty = m.filter(lit(false))
+    assert(Relational.slidingScores(empty, Seq("g"), "dt", "v")
+      .collect().isEmpty)
+    assert(Relational.slidingScores(empty, Seq("g"), "dt", "v",
+      null, null).collect().isEmpty)
+  }
+
+  test("slidingScores bounded is empty on an inverted or null range") {
+    val m = slidingInput
+    assert(Relational.slidingScores(m, Seq("g"), "dt", "v",
+      "2017-03-31", "2015-02-28").collect().isEmpty)
+    assert(Relational.slidingScores(m, Seq("g"), "dt", "v",
+      null, "2017-03-31").collect().isEmpty)
+    assert(Relational.slidingScores(m, Seq("g"), "dt", "v",
+      "2015-02-28", null).collect().isEmpty)
+    // a narrower range keeps only the month ends inside it
+    assert(Relational.slidingScores(m, Seq("g"), "dt", "v",
+        "2016-01-01", "2016-02-28")
+      .select($"dt").as[String].collect().toSeq == Seq("2016-01-31"))
+  }
+
+  test("slidingScores fails on a malformed bound, naming it") {
+    val m = slidingInput
+    val s = intercept[IllegalArgumentException] {
+      Relational.slidingScores(m, Seq("g"), "dt", "v",
+        "2016-1-5", "2016-03-31")
+    }
+    assert(s.getMessage.contains("start bound '2016-1-5'"))
+    val e = intercept[IllegalArgumentException] {
+      Relational.slidingScores(m, Seq("g"), "dt", "v",
+        "2016-01-05", "2016-3-31")
+    }
+    assert(e.getMessage.contains("end bound '2016-3-31'"))
+  }
+
   test("surrogateKeys keeps existing ids, continues from max") {
     val df = Seq((10L, Some(10L)), (11L, None), (12L, Some(3L)),
                  (13L, None))

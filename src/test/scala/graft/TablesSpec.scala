@@ -41,37 +41,41 @@ class TablesSpec extends AnyFunSuite {
     }
   }
 
-  test("stagedWithStringRange equals agg(min, max) in unsigned UTF-8 order") {
-    Tables.stagedScope {
-      val df = stringsDf
-      val (st, range) = Tables.stagedWithStringRange(df, "ts_srange", "s")
-      val r = df.agg(min("s"), max("s")).first()
-      assert(range == Some((r.getString(0), r.getString(1))))
-      assert(range == Some(("", "\uD83D\uDE00")))
-      assert(st.count() == strings.size.toLong)
-    }
+  /** Write `df` to a fresh dir and read column `s`'s footer range over
+    * the written part files, as the ODS load range does. */
+  private def writtenRange(df: DataFrame, tag: String):
+      Option[(String, String, Long)] = {
+    val dir = TestSpark.tmpPath(tag)
+    try {
+      val out = dir.resolve("t").toString
+      df.write.parquet(out)
+      Tables.parquetFilesStringRange(
+        spark.read.parquet(out).inputFiles.toSeq, hconf, "s")
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
   }
 
-  test("stagedWithStringRange is None for an all-null column") {
-    Tables.stagedScope {
-      val df = spark.range(0, 10).select(lit(null).cast("string").as("s"))
-      assert(Tables.stagedWithStringRange(df, "ts_srange_null", "s")._2
-        .isEmpty)
-    }
+  test("parquetFilesStringRange equals agg(min, max) in unsigned UTF-8 " +
+       "order") {
+    val r = stringsDf.agg(min("s"), max("s")).first()
+    val range = writtenRange(stringsDf, "ts_srange")
+    assert(range.map(x => (x._1, x._2)) ==
+      Some((r.getString(0), r.getString(1))))
+    assert(range == Some(("", "\uD83D\uDE00", strings.size.toLong)))
   }
 
-  test("stagedWithStringRange does not trust truncated footer stats") {
+  test("parquetFilesStringRange is None for an all-null column") {
+    val df = spark.range(0, 10).select(lit(null).cast("string").as("s"))
+    assert(writtenRange(df, "ts_srange_null").isEmpty)
+  }
+
+  test("parquetFilesStringRange does not trust truncated footer stats") {
     TestSpark.withConf("parquet.statistics.truncate.length" -> "4") {
-      Tables.stagedScope {
-        import spark.implicits._
-        val df = Seq("abcdefgh", "zyxwvuts", "mmmmmmmmmm").toDF("s")
-        assert(Tables.stagedWithStringRange(df, "ts_srange_trunc", "s")._2
-          .isEmpty)
-        // 3-byte code points: the cut lands on a boundary below the limit
-        val cjk = Seq("\u4E2D\u6587\u4E2D\u6587").toDF("s")
-        assert(Tables.stagedWithStringRange(cjk, "ts_srange_trunc", "s")._2
-          .isEmpty)
-      }
+      import spark.implicits._
+      val df = Seq("abcdefgh", "zyxwvuts", "mmmmmmmmmm").toDF("s")
+      assert(writtenRange(df, "ts_srange_trunc").isEmpty)
+      // 3-byte code points: the cut lands on a boundary below the limit
+      val cjk = Seq("\u4E2D\u6587\u4E2D\u6587").toDF("s")
+      assert(writtenRange(cjk, "ts_srange_trunc").isEmpty)
     }
   }
 
@@ -130,7 +134,6 @@ class TablesSpec extends AnyFunSuite {
       val calls: Seq[() => Any] = Seq(
         () => Tables.staged(df, "ts_wc"),
         () => Tables.stagedCounted(df, "ts_wc"),
-        () => Tables.stagedWithStringRange(df, "ts_wc", "s"),
         () => Tables.stagedWithLongMax(df, "ts_wc", "id"))
       for (f <- calls) {
         val before = Tables.stagedWriteCount
